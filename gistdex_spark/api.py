@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 from gistdex_spark.functions.embedder import embed_text
 from gistdex_spark.operators import search as S
 from gistdex_spark.operators.reconstruct import original_content, section_content
-from gistdex_spark.queries import with_score
 from gistdex_spark.sources.indexer import (
     delete_sources,
     incremental_filter,
@@ -37,13 +36,6 @@ from gistdex_spark.sources.indexer import (
     sources_from_chunks,
     write_chunk_store,
 )
-
-
-def _seq_norm(vec: list[float]) -> float:
-    s = 0.0
-    for v in vec:
-        s += v * v
-    return s**0.5
 
 
 class GistdexSpark:
@@ -148,11 +140,10 @@ class GistdexSpark:
         """Semantic top-k with optional rerank / hybrid re-score — the exact
         reference pipeline: filter → kNN → (rerank | hybrid) → sort."""
         qv = embed_text(query, self.dim)
-        qn = _seq_norm(qv)
         corpus = self.chunks()
         if source_type is not None:
             corpus = corpus.filter(F.col("source_type") == source_type)
-        scored = with_score(corpus, qv, qn)
+        scored = S.with_score(corpus, qv, S.seq_norm(qv))
         top = scored.orderBy(F.desc("score"), F.asc("id")).limit(k)
         if hybrid:
             top = S.hybrid_score(top, query, keyword_weight, content_col="content")

@@ -265,7 +265,6 @@ class MCPServer:
         from gistdex_spark.functions.embedder import embed_text
         from gistdex_spark.operators import search as S
         from gistdex_spark.operators.search import decode_cursor, encode_cursor
-        from gistdex_spark.queries import with_score
         from gistdex_spark.sources.cache_store import append_query_cache
 
         goal, query = args.get("goal", ""), args["query"]
@@ -282,8 +281,7 @@ class MCPServer:
                 goal = state.get("goal") or goal
 
         qv = embed_text(query, self.eng.dim)
-        qn = sum(v * v for v in qv) ** 0.5
-        scored = with_score(self.eng.chunks(), qv, qn)
+        scored = S.with_score(self.eng.chunks(), qv, S.seq_norm(qv))
         excludes = ctx.get("excludeResults") or []
         if excludes:
             scored = S.exclude_ids(scored, excludes, id_col="id")

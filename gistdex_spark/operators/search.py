@@ -27,9 +27,52 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from gistdex_spark.functions.text import match_count, query_words, tokens
-from gistdex_spark.functions.vectors import cosine, vector_literal
+from gistdex_spark.functions.vectors import cosine, spark_dot_sql, vector_literal
 
 ROUND = 6
+
+
+def seq_norm(vec: list[float]) -> float:
+    """Query-vector norm for :func:`with_score`: a sequential left-fold sum
+    of squares, the accumulation order of the engines' row norm."""
+    s = 0.0
+    for v in vec:
+        s += v * v
+    return s**0.5
+
+
+def with_score(
+    df: DataFrame,
+    qv: list[float],
+    qn: float,
+    vec_col: str = "embedding",
+    score_col: str = "score",
+) -> DataFrame:
+    """Attach ``round(cosine(vec_col, qv), 6)``, with ``qn`` the norm of
+    ``qv`` computed by the caller. A zero row vector scores 0.0; a null
+    embedding, a null element or a length mismatch scores null.
+
+    Plan shape: ``qv`` is one array literal and ``qn`` a double literal, so
+    scoring adds no Spark job and no join. The row norm gets its own
+    projection: it is read twice (zero guard and denominator), and
+    CollapseProject does not inline a non-cheap expression used twice, so
+    it is evaluated once per row. Each expression is parsed from SQL text
+    in one JVM call (:func:`spark_dot_sql`).
+    """
+    q, ne = "__q_vec", "__row_norm"
+    score = (
+        f"round(CASE WHEN {ne} = 0D THEN 0D "
+        f"ELSE {spark_dot_sql(vec_col, q)} / ({ne} * {float(qn)!r}D) END, {ROUND})"
+    )
+    return (
+        df.select(
+            "*",
+            vector_literal(qv).alias(q),
+            F.expr(f"sqrt({spark_dot_sql(vec_col, vec_col)})").alias(ne),
+        )
+        .withColumn(score_col, F.expr(score))
+        .drop(q, ne)
+    )
 
 
 def score_against(

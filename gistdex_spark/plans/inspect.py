@@ -35,6 +35,25 @@ def executed_plan(df: DataFrame) -> str:
         spark.conf.set(key, old)
 
 
+def optimized_plan(df: DataFrame) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def collect_jobs(df: DataFrame, group: str) -> int:
+    """Collect ``df`` under its own job group; return how many Spark jobs
+    the collect ran (plan building outside the group is not counted)."""
+    sc = df.sparkSession.sparkContext
+    old = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(group, group)
+    try:
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", old)
+    # the status store is filled from the listener bus, asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def scans(df: DataFrame) -> list[dict]:
     """One dict per parquet scan: columns read, pushed filters."""
     out = []

@@ -11,7 +11,6 @@ literals into BOTH plans, so there is no cross-engine RNG to disagree.
 from __future__ import annotations
 
 import logging
-import math
 import os
 import threading
 from collections import OrderedDict
@@ -31,6 +30,7 @@ from gistdex_spark.operators import similarity as SIM
 from gistdex_spark.operators import pipeline as P
 from gistdex_spark.operators import textstats as TS
 from gistdex_spark.operators.chunking import sql_chunk_fixed
+from gistdex_spark.operators.search import seq_norm, with_score
 from gistdex_spark.sources.tables import load_table, spread
 
 ROUND = 6
@@ -40,57 +40,17 @@ ROUND = 6
 # --------------------------------------------------------------------------
 
 
-def _seq_norm(vec: list[float]) -> float:
-    # Sequential left-fold sum — same accumulation order as both engines.
-    s = 0.0
-    for v in vec:
-        s += v * v
-    return math.sqrt(s)
-
-
 Q_MAIN_TEXT = "vector database query"
 QV_MAIN = embed_text(Q_MAIN_TEXT)
-QN_MAIN = _seq_norm(QV_MAIN)
+QN_MAIN = seq_norm(QV_MAIN)
 
 Q_DOC_TEXT = "table join merge"
 QV_DOC = embed_text(Q_DOC_TEXT)
-QN_DOC = _seq_norm(QV_DOC)
+QN_DOC = seq_norm(QV_DOC)
 
 BATCH_TEXTS = ["table join merge", "stream window batch", "filter sort hash"]
 BATCH_VECS = [embed_text(t) for t in BATCH_TEXTS]
-BATCH_NORMS = [_seq_norm(v) for v in BATCH_VECS]
-
-
-def with_score(
-    df: DataFrame,
-    qv: list[float],
-    qn: float,
-    vec_col: str = "embedding",
-    score_col: str = "score",
-) -> DataFrame:
-    """Attach rounded cosine vs a query vector carried as a broadcast
-    one-row DataFrame (keeps the expression tree small — a 64-element
-    literal array inlined into Catalyst blows up optimizer time when the
-    projection collapses, and a broadcast row is the scalable shape anyway).
-    """
-    spark = df.sparkSession
-    qdf = spark.createDataFrame(
-        [(qv, float(qn))], schema="q__vec ARRAY<DOUBLE>, q__norm DOUBLE"
-    )
-    ne = V.l2_norm(F.col(vec_col))
-    return (
-        df.crossJoin(F.broadcast(qdf))
-        .withColumn(
-            score_col,
-            F.round(
-                F.when(ne == F.lit(0.0), F.lit(0.0)).otherwise(
-                    V.dot(F.col(vec_col), F.col("q__vec")) / (ne * F.col("q__norm"))
-                ),
-                ROUND,
-            ),
-        )
-        .drop("q__vec", "q__norm")
-    )
+BATCH_NORMS = [seq_norm(v) for v in BATCH_VECS]
 
 
 def sql_cos(vec_col: str, qv: list[float], qn: float) -> str:
@@ -6947,7 +6907,7 @@ def user_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ==========================================================================
 
 _QV16 = QV_MAIN[:16]
-_QN16 = _seq_norm(_QV16)
+_QN16 = seq_norm(_QV16)
 
 
 @register(

@@ -342,23 +342,22 @@ def append_packed_shards(
     _check_untorn(stored, out_path)
     stream_end = int(stored["stream_end"] or 0)
     max_doc = stored["max_doc"]
+    # Monotone-ingest guard. With a seam the spans are materialized, so
+    # one tiny agg over them replaces a second scan of the batch. Without
+    # one, an agg over the lazy spans would replay the window and offsets
+    # join over the whole batch; a doc_id-only probe of the batch is
+    # cheaper and raises before any tokenize.
+    if max_doc is not None and materialize is None:
+        if df.filter(F.col("doc_id") <= F.lit(max_doc)).select("doc_id").head(1):
+            _raise_non_monotone(max_doc)
     spans = _narrow_spans(
         df, shard_tokens, content_col, token_count_col, materialize,
         offset=stream_end,
     )
-    # Monotone-ingest guard on the MATERIALIZED narrow spans (one tiny
-    # agg over checkpointed (doc_id, n_tok) rows) instead of a second
-    # scan of the batch source — same contract, one fewer pass; the
-    # error path now pays the tokenize before raising, which is fine
-    # for an exceptional path.
-    if max_doc is not None:
+    if max_doc is not None and materialize is not None:
         min_doc = spans.agg(F.min("doc_id").alias("m")).first()["m"]
         if min_doc is not None and min_doc <= max_doc:
-            raise ValueError(
-                f"append_packed_shards: batch contains doc_id <= stored "
-                f"max {max_doc} — assignment is a function of the doc_id-"
-                f"ordered stream; out-of-order ingest needs a full rewrite"
-            )
+            _raise_non_monotone(max_doc)
     staged = _attach_payload(df, spans, content_col)
     (
         _with_committer(
@@ -375,6 +374,14 @@ def append_packed_shards(
     )
     manifest.write.mode("overwrite").parquet(
         os.path.join(out_path, "_manifest")
+    )
+
+
+def _raise_non_monotone(max_doc) -> None:
+    raise ValueError(
+        f"append_packed_shards: batch contains doc_id <= stored "
+        f"max {max_doc} — assignment is a function of the doc_id-"
+        f"ordered stream; out-of-order ingest needs a full rewrite"
     )
 
 

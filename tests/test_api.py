@@ -4,10 +4,15 @@ mirroring the reference's integration flow
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 import pytest
 from pyspark.sql import functions as F
 
 from gistdex_spark.api import GistdexSpark
+from gistdex_spark.functions.embedder import embed_text
+from gistdex_spark.functions.text import query_words
+from gistdex_spark.operators.search import seq_norm, with_score
 
 
 @pytest.fixture(scope="module")
@@ -79,6 +84,72 @@ def test_hybrid_vs_rerank_paths(engine):
     assert any(r.score != s.score for r, s in zip(rr, sem)) or any(
         h.score != s.score for h, s in zip(hy, sem)
     )
+
+
+def _round6(x: float) -> float:
+    """Spark's ``round(double, 6)``: HALF_UP on the shortest decimal form."""
+    return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
+
+
+def _python_search(engine, query, k, source_type=None, hybrid=False, w=0.3):
+    """Independent reference for GistdexSpark.search: sequential double dot
+    products, the zero-norm guard, HALF_UP rounding, (score desc, id asc)
+    top-k, then the keyword rerank or hybrid blend over the same rows."""
+    qv = embed_text(query, engine.dim)
+    qn = seq_norm(qv)
+    rows = engine.chunks().select("id", "content", "embedding", "source_type").collect()
+    cand = []
+    for r in rows:
+        if source_type is not None and r.source_type != source_type:
+            continue
+        e = [float(x) for x in r.embedding]
+        nn = 0.0
+        d = 0.0
+        for a, b in zip(e, qv):
+            nn += a * a
+            d += a * b
+        ne = nn**0.5
+        cand.append((0.0 if ne == 0.0 else _round6(d / (ne * qn)), r.id, r.content))
+    cand.sort(key=lambda t: (-t[0], t[1]))
+    words = query_words(query)
+    out = []
+    for score, cid, content in cand[:k]:
+        mc = sum(1 for wd in words if wd in content.lower())
+        if hybrid:
+            ratio = mc / float(len(words)) if words else 0.0
+            score = _round6(score * (1.0 - w) + ratio * w)
+        elif words:
+            score = _round6(score + mc * 0.1)
+        out.append((cid, score))
+    return sorted(out, key=lambda t: (-t[1], t[0]))
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [{}, {"hybrid": True}, {"source_type": "code"}],
+    ids=["rerank", "hybrid", "source_type"],
+)
+def test_search_scores_equal_python_cosine(engine, kw):
+    """Scores, not just ids: every mode's output equals the pure-Python
+    cosine exactly."""
+    query = "broadcast join cosine chunker"
+    got = [(r.id, r.score) for r in engine.search(query, k=4, **kw).collect()]
+    assert got == _python_search(engine, query, 4, **kw)
+    assert got
+
+
+def test_with_score_edge_cases(spark):
+    """Zero vector -> 0.0; a null embedding, a null element or a length
+    mismatch -> null; an existing score column is replaced in place."""
+    df = spark.createDataFrame(
+        [(1, [0.0, 0.0], 9.0), (2, None, 9.0), (3, [1.0, None], 9.0),
+         (4, [1.0], 9.0), (5, [3.0, 4.0], 9.0)],
+        "id INT, embedding ARRAY<FLOAT>, score DOUBLE",
+    )
+    out = with_score(df, [1.0, 0.0], 1.0)
+    assert out.columns == ["id", "embedding", "score"]
+    got = {r.id: r.score for r in out.collect()}
+    assert got == {1: 0.0, 2: None, 3: None, 4: None, 5: 0.6}
 
 
 def test_search_batch_topk_per_query(engine):

@@ -9,11 +9,13 @@ import re
 import pytest
 
 from gistdex_spark.plans.inspect import (
+    collect_jobs,
     executed_plan,
     final_plan,
     has_take_ordered,
     join_strategies,
     num_shuffles,
+    optimized_plan,
     scan_for,
     scans,
     single_partition_exchanges,
@@ -35,6 +37,56 @@ def test_knn_topk_is_heap_not_sort(q):
 def test_knn_scan_prunes_columns(q):
     s = scan_for(q("knn_topk"), "embeddings")
     assert set(s["columns"]) <= {"vec_id", "embedding", "label"}
+
+
+@pytest.fixture(scope="module")
+def engine(spark, tmp_path_factory):
+    from gistdex_spark.api import GistdexSpark
+
+    eng = GistdexSpark(spark, str(tmp_path_factory.mktemp("plans") / "chunks"), dim=32)
+    docs = [
+        (f"doc-{i}", f"spark join shuffle text number {i} " * 20, "docs" if i % 2 else "code")
+        for i in range(6)
+    ]
+    eng.index_text(
+        spark.createDataFrame(docs, "source_id STRING, content STRING, source_type STRING"),
+        size=200, overlap=40,
+    )
+    return eng
+
+
+_SEARCH_MODES = [{}, {"hybrid": True}, {"source_type": "code"}]
+
+
+@pytest.fixture(scope="module")
+def scored_frames(q, engine):
+    return [q("knn_topk")] + [
+        engine.search("spark join", k=3, **kw) for kw in _SEARCH_MODES
+    ]
+
+
+def test_scoring_ships_query_vector_as_literal(scored_frames):
+    """The query vector is a plan literal: no pickled RDD of it and no
+    broadcast cross join, which cost a whole Spark job per search."""
+    for df in scored_frames:
+        plan = executed_plan(df)
+        assert "ExistingRDD" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_scoring_evaluates_row_norm_once(scored_frames):
+    """The row norm is read twice by the score; the optimized plan must
+    hold exactly one norm fold."""
+    for df in scored_frames:
+        folds = re.findall(r"zip_with\(embedding#\d+, embedding#\d+", optimized_plan(df))
+        assert len(folds) == 1, folds
+
+
+def test_search_collect_is_one_job(engine):
+    """Scoring, top-k and rerank run in the scan's job: one job a search."""
+    for i, kw in enumerate(_SEARCH_MODES):
+        df = engine.search("spark join", k=3, **kw)
+        assert collect_jobs(df, f"test-search-jobs-{i}") == 1, kw
 
 
 def test_lang_filter_pushed_to_scan(q):

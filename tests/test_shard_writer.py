@@ -185,6 +185,34 @@ def test_append_rejects_non_monotone_batch(spark, tmp_path):
     assert _frame(read_shard_census(spark, out)) == before
 
 
+@pytest.mark.parametrize("seam", [False, True], ids=["no_seam", "seam"])
+def test_append_guard_runs_before_write(spark, tmp_path, seam):
+    """Both guard paths reject an out-of-order batch and leave the store
+    untouched. Without a seam the guard probes doc_id alone, so it raises
+    before the batch's token count is ever evaluated."""
+    from gistdex_spark.sources.shard_writer import append_packed_shards
+
+    docs = load_table(spark, SF_CORRECTNESS, "documents").select(
+        "doc_id", "text"
+    )
+    out = str(tmp_path / "guard")
+    write_packed_shards(
+        docs.filter(F.col("doc_id") >= 100), out, shard_tokens=SHARD_TOKENS
+    )
+    before = _frame(read_shard_census(spark, out))
+    late = docs.filter(F.col("doc_id") < 100)
+    kw = (
+        {"materialize": lambda d: d.localCheckpoint(eager=True)}
+        if seam
+        else {"token_count_col": F.raise_error(F.lit("token count evaluated"))}
+    )
+    with pytest.raises(ValueError, match="doc_id <= stored max"):
+        append_packed_shards(
+            spark, late, out, shard_tokens=SHARD_TOKENS, **kw
+        )
+    assert _frame(read_shard_census(spark, out)) == before
+
+
 def test_stream_shard_append_matches_single_write(spark, tmp_path):
     """Streaming mirror: micro-batched docs appended through
     stream_shard_append must leave shards census-equal to one
