@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gistdex_spark.materialize import Materialize, checkpoint
 from gistdex_spark.operators.textstats import fingerprint
 
 ROUND = 6
@@ -534,8 +535,7 @@ def ngram_jaccard_banded(
     num_hashes: int = 16,
     bands: int = 4,
     bucket_partitions: int | None = None,
-    materialize: bool = True,
-    checkpoint=None,
+    materialize: Materialize = checkpoint,
 ) -> DataFrame:
     """Banded n-gram Jaccard near-dup: MinHash banding over the WORD
     n-gram sets proposes candidates, EXACT n-gram Jaccard verifies only
@@ -570,20 +570,13 @@ def ngram_jaccard_banded(
     gsets = _spread(df).select("doc_id", F.expr(toks).alias("__toks")).select(
         "doc_id", F.expr(grams).alias("__grams")
     )
-    if materialize:
-        # gsets feeds the signature build AND both verify-join sides;
-        # Spark has no cross-branch/join-side CSE, so without a cut the
-        # tokenize+gram projection runs three times per action — the
-        # same store-vs-recompute trade as semdedup's base frame.
-        # ``checkpoint`` lets callers with their own bookkeeping
-        # (queries._ckpt) own the blocks; ``materialize=False`` selects
-        # plain recompute (the right call when three streaming passes
-        # beat materializing the gram corpus at 100 TB).
-        gsets = (
-            checkpoint(gsets)
-            if checkpoint is not None
-            else gsets.localCheckpoint(eager=True)
-        )
+    # gsets feeds the signature build AND both verify-join sides; Spark
+    # has no cross-branch/join-side CSE, so without a cut the
+    # tokenize+gram projection runs three times per action — the same
+    # store-vs-recompute trade as semdedup's base frame. Where three
+    # streaming passes beat storing the gram corpus (100 TB), pass an
+    # identity ``materialize``.
+    gsets = materialize(gsets)
     hs = (
         f"transform(__grams, g -> "
         f"cast(conv(substring(md5(g), 1, 15), 16, 10) as bigint) % {MINHASH_P}L)"

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gistdex_spark.materialize import Materialize, checkpoint
+
 # Word-boundary-free patterns chosen to behave identically under Java
 # regex (Spark) and RE2 (DuckDB) — no backrefs, no lookaround.
 EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
@@ -1034,7 +1036,7 @@ def global_row_index(
     order_by: list,
     index_col: str = "global_idx",
     partitions: int | None = None,
-    materialize=None,
+    materialize: Materialize = checkpoint,
     materialize_input: bool = False,
 ) -> DataFrame:
     """Contiguous 1-based global row index in ``order_by`` order WITHOUT
@@ -1050,11 +1052,12 @@ def global_row_index(
     single-partition window in the plan runs over those ~hundreds of
     rows, never the corpus — and joins back as a broadcast.
 
-    The ranged frame is MATERIALIZED once (eager localCheckpoint by
-    default; pass ``materialize`` to route through a caller-managed
-    cache) before the rank and count branches consume it. This is
-    correctness, not caching: the two branches CANNOT be left to
-    re-evaluate the range exchange independently, because Spark's
+    The ranged frame is MATERIALIZED once through ``materialize``
+    (default: an eager checkpoint into the active
+    :mod:`~gistdex_spark.materialize` scope) before the rank and count
+    branches consume it. This is correctness, not caching: the two
+    branches CANNOT be left to re-evaluate the range exchange
+    independently, because Spark's
     RangePartitioner samples its boundaries with an rdd.id-derived seed
     — and ReuseExchange, which would dedupe the two evaluations, breaks
     as soon as the frame carries a column only one branch needs (column
@@ -1081,23 +1084,20 @@ def global_row_index(
     expensive to derive (a BPE tokenizer UDF, a quality-score pass) and
     narrow should opt in; a caller whose input is a cheap wide scan
     (raw text straight off parquet) should not, because checkpointing
-    the payload costs more than the second scan. Requires a
-    ``materialize`` seam that accepts multiple calls per invocation
-    (queries._ckpt_seq).
+    the payload costs more than the second scan. ``materialize`` is
+    then called twice, and must keep both checkpoints live.
     """
     from pyspark.sql import Column, Window
 
     cols = [c if isinstance(c, Column) else F.col(c) for c in order_by]
     n = partitions or df.sparkSession.sparkContext.defaultParallelism
-    if materialize_input and materialize is not None:
+    if materialize_input:
         df = materialize(df)
-    ranged = df.repartitionByRange(n, *cols).withColumn(
-        "__pid", F.spark_partition_id()
+    ranged = materialize(
+        df.repartitionByRange(n, *cols).withColumn(
+            "__pid", F.spark_partition_id()
+        )
     )
-    if materialize is None:
-        ranged = ranged.localCheckpoint(eager=True)
-    else:
-        ranged = materialize(ranged)
     local = ranged.withColumn(
         "__lrank",
         F.row_number().over(Window.partitionBy("__pid").orderBy(*cols)),
@@ -1127,7 +1127,7 @@ def global_prefix_sum(
     value_col: str,
     out_col: str = "prefix_sum",
     partitions: int | None = None,
-    materialize=None,
+    materialize: Materialize = checkpoint,
 ) -> DataFrame:
     """EXCLUSIVE global prefix sum of ``value_col`` in ``order_by``
     order (sum of all values strictly before the row) WITHOUT a
@@ -1144,29 +1144,25 @@ def global_prefix_sum(
     offsets join back as a broadcast. ``order_by`` must be a total
     order.
 
-    r15-opt (guide §1.2 — don't compute things you throw away): when a
-    ``materialize`` seam is provided, the INPUT is materialized first.
-    ``repartitionByRange`` runs a reservoir-sampling pass that evaluates
-    the child plan over EVERY row before the shuffle re-evaluates it
-    (measured: 2x UDF invocations), so without this the value column —
-    a full tokenize, or a BPE UDF — is computed twice per call. The
-    input here is always narrow (an id and a number), so the extra
-    checkpoint is a few dozen bytes per row; the seam must accept being
-    called more than once per invocation (queries._ckpt_seq).
+    r15-opt (guide §1.2 — don't compute things you throw away): the
+    INPUT is materialized first. ``repartitionByRange`` runs a
+    reservoir-sampling pass that evaluates the child plan over EVERY
+    row before the shuffle re-evaluates it (measured: 2x UDF
+    invocations), so without this the value column — a full tokenize,
+    or a BPE UDF — is computed twice per call. The input here is always
+    narrow (an id and a number), so the extra checkpoint is a few dozen
+    bytes per row. ``materialize`` is called twice (input, ranged
+    frame) and must keep both checkpoints live.
     """
     from pyspark.sql import Column, Window  # noqa: PLC0415
 
     cols = [c if isinstance(c, Column) else F.col(c) for c in order_by]
     n = partitions or df.sparkSession.sparkContext.defaultParallelism
-    if materialize is not None:
-        df = materialize(df)
-    ranged = df.repartitionByRange(n, *cols).withColumn(
-        "__pid", F.spark_partition_id()
+    ranged = materialize(
+        materialize(df)
+        .repartitionByRange(n, *cols)
+        .withColumn("__pid", F.spark_partition_id())
     )
-    if materialize is None:
-        ranged = ranged.localCheckpoint(eager=True)
-    else:
-        ranged = materialize(ranged)
     local = ranged.withColumn(
         "__lsum",
         F.coalesce(
@@ -1206,7 +1202,7 @@ def sequence_packing_stats(
     capacity: int = 512,
     content_col: str = "text",
     source_col: str = "source",
-    materialize=None,
+    materialize: Materialize = checkpoint,
     token_count_col=None,
 ) -> DataFrame:
     """Concat-and-chunk sequence-packing audit: documents are tokenized,
@@ -1275,7 +1271,7 @@ def shard_manifest(
     df: DataFrame,
     shard_tokens: int = 2048,
     content_col: str = "text",
-    materialize=None,
+    materialize: Materialize = checkpoint,
     token_count_col=None,
 ) -> DataFrame:
     """Assign documents to fixed-token-budget output shards and emit
@@ -1389,7 +1385,7 @@ def vocab_growth(
     df: DataFrame,
     content_col: str = "text",
     buckets: int = 10,
-    materialize=None,
+    materialize: Materialize = checkpoint,
     tokens_col=None,
 ) -> DataFrame:
     """Heaps-law audit: cumulative distinct vocabulary vs cumulative
@@ -1433,7 +1429,7 @@ def vocab_growth(
             df.select("doc_id", tokens_col.alias("__toks")),
             ["doc_id"],
             materialize=materialize,
-            materialize_input=materialize is not None,
+            materialize_input=True,
         )
         bucketed = idx.select(bucket_expr, F.col("__toks"))
     else:
@@ -1537,7 +1533,7 @@ def pmi_cooccurrence(
     window_tokens: int = 7,
     min_pair_count: int = 5,
     top_k: int = 20,
-    materialize=None,
+    materialize: Materialize = checkpoint,
 ) -> DataFrame:
     """Pointwise mutual information over word co-occurrence windows —
     the association-mining pass behind collocation extraction and
@@ -1588,14 +1584,9 @@ def pmi_cooccurrence(
     # Both marginal branches (c_a, c_b) read `singles`; without a cut
     # the corpus-sized explode+agg pipeline would run once per branch
     # (no cross-branch CSE). The frame is vocabulary-bounded, so the
-    # cut is cheap; `materialize` follows the vocab_growth contract
-    # (registry callers route through the tag-scoped _ckpt LRU;
-    # default eager localCheckpoint). The window count and the pair agg
-    # still each pass the corpus once — 3 passes total, not 4.
-    if materialize is None:
-        singles = singles.localCheckpoint(eager=True)
-    else:
-        singles = materialize(singles)
+    # cut is cheap. The window count and the pair agg still each pass
+    # the corpus once — 3 passes total, not 4.
+    singles = materialize(singles)
     # Pair expansion stays inside the row: an array comprehension over
     # the sorted distinct window words (i < j), then one explode.
     pairs_col = F.flatten(

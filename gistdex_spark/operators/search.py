@@ -209,9 +209,10 @@ def tokenized(
     ``tokd=`` parameter — tokenization is the dominant map cost of
     sparse retrieval, and Spark has no cross-branch CSE, so each
     operator referencing its own copy re-tokenizes the corpus per pass.
-    The caller owns the materialization policy: localCheckpoint for
-    bounded corpora (the query-layer choice at bench scale),
-    persist(DISK_ONLY) or plain recompute-per-pass at 100 TB."""
+    The caller owns the materialization policy: the registry's
+    retrieval chains checkpoint it into their query's
+    :mod:`~gistdex_spark.materialize` scope; at 100 TB,
+    persist(DISK_ONLY) or plain recompute-per-pass."""
     return df.select(F.col(id_col), tokens(text_col).alias("__toks"))
 
 

@@ -29,10 +29,10 @@ oracle cannot disagree on a boundary pair.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from gistdex_spark.materialize import Materialize, checkpoint
 
 ROUND = 6
 
@@ -66,9 +66,8 @@ def semdedup(
     salt: int = 8,
     pair_partitions: int | None = 64,
     partitions: int | None = None,
-    materialize: bool = True,
     max_cluster_size: int | None = None,
-    checkpoint: Callable[[DataFrame], DataFrame] | None = None,
+    materialize: Materialize = checkpoint,
 ) -> DataFrame:
     """(id, cluster, cos_centroid, pruned): SemDeDup verdict per vector.
 
@@ -97,11 +96,10 @@ def semdedup(
     ``(row_number() OVER (PARTITION BY cluster ORDER BY cos_centroid,
     id) - 1) // cap``.
 
-    ``checkpoint`` overrides the internal ``localCheckpoint`` used to cut
-    the triple-consumed ``base`` lineage: callers with their own
-    checkpoint bookkeeping (queries._ckpt's per-tag registry) pass a hook
-    so the blocks are released when the owning query rebuilds, instead of
-    leaking for the process lifetime (r9 ADVICE).
+    ``materialize`` cuts the triple-consumed ``base`` lineage. The
+    default checkpoints into the active
+    :mod:`~gistdex_spark.materialize` scope, so a registry query's
+    blocks are released with the query's other checkpoints.
     """
     from gistdex_spark.operators.ivf import assign_clusters
 
@@ -161,19 +159,14 @@ def semdedup(
         ).drop("__rn0")
     else:
         base = base.withColumn("sub", F.lit(0))
-    if materialize:
-        # `base` is consumed three times (both pair-join sides and the
-        # final verdict join) and Spark has no cross-branch CSE — without
-        # a cut, the assignment argmax fold over the whole corpus runs
-        # three times per action. The eager localCheckpoint stores base
-        # once (the standard store-vs-recompute trade of multi-pass
-        # algorithms; swap for reliable checkpoint() on long cluster
-        # jobs, exactly as in connected_components).
-        base = (
-            checkpoint(base)
-            if checkpoint is not None
-            else base.localCheckpoint(eager=True)
-        )
+    # `base` is consumed three times (both pair-join sides and the final
+    # verdict join) and Spark has no cross-branch CSE — without a cut,
+    # the assignment argmax fold over the whole corpus runs three times
+    # per action. The eager checkpoint stores base once (the standard
+    # store-vs-recompute trade of multi-pass algorithms; swap for
+    # reliable checkpoint() on long cluster jobs, exactly as in
+    # connected_components).
+    base = materialize(base)
     left = base.select(
         F.col("cluster"),
         F.col("sub"),

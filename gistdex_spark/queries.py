@@ -10,6 +10,7 @@ literals into BOTH plans, so there is no cross-engine RNG to disagree.
 
 from __future__ import annotations
 
+import functools
 import logging
 import os
 import threading
@@ -19,10 +20,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gistdex_spark import materialize as M
 from gistdex_spark.functions import text as T
 from gistdex_spark.functions import vectors as V
 from gistdex_spark.functions.timeutil import epoch_s, epoch_us
 from gistdex_spark.functions.embedder import embed_text
+from gistdex_spark.materialize import checkpoint as _ckpt
 from gistdex_spark.operators import analytics as A
 from gistdex_spark.operators import dedup as D
 from gistdex_spark.operators import search as S
@@ -72,12 +75,55 @@ REGISTRY: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
 
+# Each query invocation owns one Materializer, the scope that ``_ckpt``
+# and the operators' default cuts record into; a query invoked inside an
+# open scope (a nested query, or a caller's ``materialize.scope``) uses
+# that scope instead. _LIVE keeps the scopes of the most recently built
+# checkpointing queries: a query's frame stays consumable until the same
+# query is rebuilt or _MAX_LIVE_QUERIES other checkpointing queries are
+# built after it, and a full-registry sweep holds at most that many.
+_LIVE: OrderedDict[str, M.Materializer] = OrderedDict()
+_MAX_LIVE_QUERIES = 4
+_LIVE_LOCK = threading.Lock()
+_log = logging.getLogger(__name__)
+
+
+def _release(name: str, why: str) -> None:
+    m = _LIVE.pop(name, None)
+    if m is not None:
+        _log.info(
+            "released checkpoint RDDs %s of query %r (%s): re-executing "
+            "its frame now fails with a missing-block error",
+            m.release(), name, why,
+        )
+
+
 def register(name: str, oracle: str | None = None):
     def deco(fn: QueryFn) -> QueryFn:
-        REGISTRY[name] = fn
+        @functools.wraps(fn)
+        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            if M.active() is not None:
+                return fn(spark, sf_dir)
+            with _LIVE_LOCK:
+                _release(name, "rebuilt")
+            m = M.Materializer()
+            with M.scope(m):
+                try:
+                    out = fn(spark, sf_dir)
+                except BaseException:
+                    m.release()
+                    raise
+            if m.rdd_ids:
+                with _LIVE_LOCK:
+                    while len(_LIVE) >= _MAX_LIVE_QUERIES:
+                        _release(next(iter(_LIVE)), "LRU bound")
+                    _LIVE[name] = m
+            return out
+
+        REGISTRY[name] = run
         if oracle is not None:
             ORACLES[name] = oracle
-        return fn
+        return run
 
     return deco
 
@@ -86,95 +132,6 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     embs = load_table(spark, sf_dir, "embeddings")
     return docs.join(embs, docs.doc_id == embs.vec_id, "inner").drop("vec_id")
-
-
-# Live registry-query checkpoints, scoped PER TAG (r9 verdict item 6 —
-# the old single-global-copy contract was harness-shaped: building query
-# B invalidated query A's still-unconsumed frame). Retrieval queries that
-# are inherently multi-pass (PRF, RRF, RAG) materialize the tokenized
-# corpus once per invocation via localCheckpoint; without cleanup each
-# bench warm-up + timed run leaks one more copy into executor storage for
-# the process lifetime (r7 ADVICE). Scoping: rebuilding the SAME tag
-# releases only that tag's previous blocks, so two different queries'
-# frames can coexist and be consumed out of order; an LRU bound of
-# _MAX_LIVE_TAGS distinct tags keeps full-registry sweeps from
-# accumulating one live checkpoint per _ckpt-using query (the memory
-# bound the old global contract provided). DataFrame.unpersist() is a
-# no-op for localCheckpoints (the cache lives on the underlying RDD, not
-# in CacheManager), so the freed unit is the checkpointed RDD id, diffed
-# from sc.getPersistentRDDs around the eager materialization. Contract:
-# a returned DataFrame must be consumed before the SAME query is rebuilt
-# or more than _MAX_LIVE_TAGS other checkpointing queries run — a
-# localCheckpoint has truncated lineage, so its blocks are unrecoverable
-# after unpersist. When the contract IS violated the failure surfaces
-# far from the cause (a block-not-found error at the later re-collect),
-# so every release is logged at INFO with the owning query's tag and RDD
-# ids — the trail a debugger needs to connect the error back here. A
-# lock serializes builds so a parallel harness can't interleave the
-# diff-around-materialize bookkeeping.
-_LIVE_CKPTS: "OrderedDict[str, list[int]]" = OrderedDict()
-_MAX_LIVE_TAGS = 4
-_CKPT_LOCK = threading.Lock()
-_log = logging.getLogger(__name__)
-
-
-def _ckpt(frame: DataFrame, tag: str = "?") -> DataFrame:
-    """Eagerly localCheckpoint ``frame``, releasing this ``tag``'s
-    PREVIOUS checkpoint blocks first (and the least-recently-built tag's
-    when more than ``_MAX_LIVE_TAGS`` are live — see contract above).
-    ``tag`` names the owning query in the release log line; composite
-    stages within one query use ``"<query>#<stage>"`` sub-tags so a
-    later stage's build never frees an earlier stage's still-needed
-    blocks."""
-    with _CKPT_LOCK:
-        jsc = frame.sparkSession.sparkContext._jsc
-
-        def _release(t: str, why: str) -> None:
-            live = jsc.getPersistentRDDs()
-            for rid in _LIVE_CKPTS.pop(t, []):
-                if live.containsKey(rid):
-                    live.get(rid).unpersist(False)
-                    _log.info(
-                        "_ckpt: released checkpoint RDD %d of query %r "
-                        "(%s) while building %r — re-executing %r's "
-                        "DataFrame from here on fails with a "
-                        "missing-block error (see the _ckpt per-tag "
-                        "contract in queries.py)",
-                        rid, t, why, tag, t,
-                    )
-
-        _release(tag, "same-tag rebuild")
-        while len(_LIVE_CKPTS) >= _MAX_LIVE_TAGS:
-            _release(next(iter(_LIVE_CKPTS)), "LRU bound")
-        before = set(jsc.getPersistentRDDs().keySet().toArray())
-        out = frame.localCheckpoint(eager=True)
-        after = set(jsc.getPersistentRDDs().keySet().toArray())
-        _LIVE_CKPTS[tag] = sorted(after - before)
-        return out
-
-
-def _ckpt_tokd(docs: DataFrame, tag: str = "tokenized") -> DataFrame:
-    return _ckpt(S.tokenized(docs), tag)
-
-
-def _ckpt_seq(tag: str):
-    """A ``materialize`` seam callable that may be invoked MORE THAN
-    ONCE per query invocation: each call checkpoints under a fresh
-    ``tag#<n>`` sub-tag, so the second materialization does not release
-    the first's still-being-consumed blocks (the same-tag rebuild rule
-    would otherwise free stage 1 while stage 2's eager checkpoint is
-    reading it). Needed since r15-opt by the range-exchange operators
-    (global_prefix_sum / global_row_index with materialize_input),
-    which materialize their INPUT and then the ranged frame. The
-    counter restarts per query invocation, so lap N's ``#1`` correctly
-    releases lap N-1's ``#1``."""
-    n = [0]
-
-    def mat(frame: DataFrame) -> DataFrame:
-        n[0] += 1
-        return _ckpt(frame, f"{tag}#{n[0]}")
-
-    return mat
 
 
 _CORPUS_SQL = "documents d JOIN embeddings e ON d.doc_id = e.vec_id"
@@ -1602,10 +1559,7 @@ def mutual_knn_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # self-join side, the CC passes, the size agg + join — re-runs the
     # whole kNN kernel (Spark has no cross-branch CSE; the
     # neardup_triangles lesson from earlier this round).
-    g = _ckpt(
-        D.knn_graph(emb, k=_KNN_GRAPH_K).select("src_id", "nbr_id"),
-        "mutual_knn_clusters#g",
-    )
+    g = _ckpt(D.knn_graph(emb, k=_KNN_GRAPH_K).select("src_id", "nbr_id"))
     rev = g.select(
         F.col("nbr_id").alias("src_id"), F.col("src_id").alias("nbr_id")
     )
@@ -1617,9 +1571,7 @@ def mutual_knn_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("nbr_id").alias("doc_id_b"),
         )
     )
-    comp = _ckpt(
-        D.connected_components(mutual), "mutual_knn_clusters#comp"
-    )
+    comp = _ckpt(D.connected_components(mutual))
     sizes = comp.groupBy("component").agg(
         F.count(F.lit(1)).cast("bigint").alias("csize")
     )
@@ -1709,7 +1661,7 @@ _FUNNEL_ORACLE_TAIL = f"""
 
 
 def _curation_funnel_impl(
-    spark: SparkSession, sf_dir: str, tag: str, graph_of_gates
+    spark: SparkSession, sf_dir: str, graph_of_gates
 ) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1731,8 +1683,7 @@ def _curation_funnel_impl(
     metrics = _ckpt(
         TS.line_quality_gate(ent, extra_cols=("entropy_bits",)).select(
             "doc_id", "entropy_bits", "kept_frac"
-        ),
-        f"{tag}#metrics",
+        )
     )
     base = docs.select("doc_id", "source").join(
         emb.select(F.col("vec_id").alias("doc_id"), "embedding"), "doc_id"
@@ -1742,13 +1693,9 @@ def _curation_funnel_impl(
         .filter(
             (F.col("entropy_bits") >= 4.45) & (F.col("kept_frac") >= 0.8)
         )
-        .select("doc_id", "source", "embedding"),
-        f"{tag}#gates",
+        .select("doc_id", "source", "embedding")
     )
-    g = _ckpt(
-        graph_of_gates(gates).select("src_id", "nbr_id", "sim"),
-        f"{tag}#g",
-    )
+    g = _ckpt(graph_of_gates(gates).select("src_id", "nbr_id", "sim"))
     rev = g.select(
         F.col("nbr_id").alias("src_id"), F.col("src_id").alias("nbr_id")
     )
@@ -1803,7 +1750,6 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _curation_funnel_impl(
         spark,
         sf_dir,
-        "corpus_curation_funnel",
         lambda gates: D.knn_graph(gates, k=_KNN_GRAPH_K, id_col="doc_id"),
     )
 
@@ -1827,7 +1773,6 @@ def corpus_curation_funnel_blocked(
     return _curation_funnel_impl(
         spark,
         sf_dir,
-        "corpus_curation_funnel_blocked",
         lambda gates: D.knn_graph_multitable(
             gates, k=_KNN_GRAPH_K, nbits=6, n_tables=10, id_col="doc_id"
         ),
@@ -1882,10 +1827,6 @@ def sequence_packing_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return P.sequence_packing_stats(
         spread(docs),
         capacity=_PACK_CAP,
-        # tag-managed checkpoint (the _ckpt leak discipline): the range
-        # exchange materializes once per invocation and the previous
-        # invocation's blocks are released
-        materialize=_ckpt_seq("sequence_packing_stats"),
     )
 
 
@@ -1929,7 +1870,6 @@ def shard_manifest_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     return P.shard_manifest(
         spread(docs),
         shard_tokens=_SHARD_TOKENS,
-        materialize=_ckpt_seq("shard_manifest_census"),
     )
 
 
@@ -1987,7 +1927,6 @@ def shard_write_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         spread(docs),
         out,
         shard_tokens=_SHARD_TOKENS,
-        materialize=_ckpt_seq("shard_write_census"),
     )
     return read_shard_census(spark, out)
 
@@ -2187,7 +2126,6 @@ def sequence_packing_stats_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
         spread(docs),
         capacity=_PACK_CAP,
         token_count_col=bpe_token_count("text", _bpe_merges()),
-        materialize=_ckpt_seq("sequence_packing_stats_bpe"),
     )
 
 
@@ -2229,7 +2167,6 @@ def shard_manifest_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
         spread(docs),
         shard_tokens=_SHARD_TOKENS,
         token_count_col=bpe_token_count("text", _bpe_merges()),
-        materialize=_ckpt_seq("shard_manifest_bpe"),
     )
 
 
@@ -2377,7 +2314,6 @@ def heaps_law_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return P.vocab_growth(
         spread(docs),
         tokens_col=bpe_tokens("text", _bpe_merges()),
-        materialize=_ckpt_seq("heaps_law_bpe"),
     )
 
 
@@ -2432,7 +2368,6 @@ def shard_write_census_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
         out,
         shard_tokens=_SHARD_TOKENS,
         token_count_col=bpe_token_count("text", _bpe_merges()),
-        materialize=_ckpt_seq("shard_write_census_bpe"),
     )
     return read_shard_census(spark, out)
 
@@ -2893,7 +2828,6 @@ def dedup_ngram_jaccard_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines and the value compare stays exact at every SF."""
     return D.ngram_jaccard_banded(
         load_table(spark, sf_dir, "documents"), n=3, threshold=0.1,
-        checkpoint=lambda f: _ckpt(f, "dedup_ngram_jaccard_banded"),
     )
 
 
@@ -3447,7 +3381,6 @@ def media_shard_write_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         shard_tokens=_MEDIA_SHARD_BYTES,
         content_col="payload",
         token_count_col=F.length(F.col("payload")),
-        materialize=_ckpt_seq("media_shard_write_census"),
     )
     return read_shard_census(spark, out)
 
@@ -5148,7 +5081,6 @@ def curated_shard_write_census(
         kept.select("doc_id", "text"),
         out,
         shard_tokens=_SHARD_TOKENS,
-        materialize=_ckpt_seq("curated_shard_write_census"),
     )
     return read_shard_census(spark, out)
 
@@ -5211,7 +5143,6 @@ def shard_append_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(F.col("doc_id") <= mid).select("doc_id", "text"),
         out,
         shard_tokens=_SHARD_TOKENS,
-        materialize=_ckpt_seq("shard_append_census"),
     )
     append_packed_shards(
         spark,
@@ -5917,12 +5848,11 @@ def heaps_law_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heaps-law vocabulary-growth curve over the doc_id-ordered corpus
     in 10 slices: cumulative tokens vs cumulative distinct vocabulary +
     type/token ratio. Order from global_row_index (one range exchange,
-    pinned by the _ckpt-routed materialization), first-occurrence via
+    pinned by the checkpointed ranged frame), first-occurrence via
     map-combined min agg; windows see 10 rows
     (operators/pipeline.vocab_growth)."""
     return P.vocab_growth(
         load_table(spark, sf_dir, "documents"),
-        materialize=lambda f: _ckpt(f, "heaps_law_audit"),
     )
 
 
@@ -6001,7 +5931,6 @@ def pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     — never a corpus self-join (operators/pipeline.pmi_cooccurrence)."""
     return P.pmi_cooccurrence(
         load_table(spark, sf_dir, "documents"),
-        materialize=lambda f: _ckpt(f, "pmi_cooccurrence#singles"),
     )
 
 
@@ -6153,7 +6082,6 @@ def resampled_shard_write_census(
         rows,
         out,
         shard_tokens=_SHARD_TOKENS,
-        materialize=_ckpt_seq("resampled_shard_write_census"),
     )
     return read_shard_census(spark, out)
 
@@ -6241,7 +6169,6 @@ def curriculum_shard_write_census(
     idx = P.global_row_index(
         q,
         [F.col("quality").desc(), F.col("doc_id")],
-        materialize=_ckpt_seq("curriculum_rank"),
         materialize_input=True,
     )
     rows = (
@@ -6257,7 +6184,6 @@ def curriculum_shard_write_census(
         rows,
         out,
         shard_tokens=_SHARD_TOKENS,
-        materialize=_ckpt_seq("curriculum_shard_write_census"),
     )
     return read_shard_census(spark, out)
 
@@ -7330,7 +7256,6 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=0.35,
         partitions=spark.sparkContext.defaultParallelism,
         max_cluster_size=_SEMDEDUP_CAP,
-        checkpoint=lambda df: _ckpt(df, "semdedup_prune#base"),
     )
 
 
@@ -7368,7 +7293,6 @@ def semdedup_adaptive_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=0.35,
         partitions=spark.sparkContext.defaultParallelism,
         max_cluster_size=_SEMDEDUP_CAP,
-        checkpoint=lambda df: _ckpt(df, "semdedup_adaptive_prune#base"),
     )
 
 
@@ -7466,8 +7390,7 @@ def corpus_curation_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     gemb = _ckpt(
         emb.join(
             gated.select(F.col("doc_id").alias("vec_id")), "vec_id"
-        ).select("vec_id", "embedding"),
-        "corpus_curation_semantic",
+        ).select("vec_id", "embedding")
     )
     c = suggest_n_clusters(gemb.count(), target_cluster_size=50)
     cents = (
@@ -7483,11 +7406,6 @@ def corpus_curation_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=0.35,
         partitions=spark.sparkContext.defaultParallelism,
         max_cluster_size=_SEMDEDUP_CAP,
-        # Sub-tag: this query already holds the gemb checkpoint under its
-        # own tag, and semdedup's base DERIVES from gemb — a same-tag
-        # rebuild here would free gemb's blocks while cents still needs
-        # them (see the _ckpt per-tag contract).
-        checkpoint=lambda df: _ckpt(df, "corpus_curation_semantic#semdedup"),
     )
     # Join the UNGATED docs (r15-opt, guide §1.2): the survivor ids are
     # by construction a subset of the gate-passing ids (semdedup ran on
@@ -8545,7 +8463,7 @@ def hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs_kw = load_table(spark, sf_dir, "documents")
     kw = (
         S.bm25(docs_kw, _BM25_TERMS, k1=_BM25_K1, b=_BM25_B,
-               tokd=_ckpt_tokd(docs_kw, "hybrid_rrf"))
+               tokd=_ckpt(S.tokenized(docs_kw)))
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(20)
     )
@@ -9085,7 +9003,7 @@ def rag_retrieval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs_kw = load_table(spark, sf_dir, "documents")
     kw = (
         S.bm25(docs_kw, _BM25_TERMS, k1=_BM25_K1, b=_BM25_B,
-               tokd=_ckpt_tokd(docs_kw, "rag_retrieval_pipeline"))
+               tokd=_ckpt(S.tokenized(docs_kw)))
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(20)
     )
@@ -9193,7 +9111,7 @@ def prf_expanded_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     same seam takes persist(DISK_ONLY) or recompute; the caller owns
     the policy (see S.tokenized)."""
     docs = load_table(spark, sf_dir, "documents")
-    tokd = _ckpt_tokd(docs, "prf_expanded_search")
+    tokd = _ckpt(S.tokenized(docs))
     seed_hits = (
         S.bm25(docs, _BM25_TERMS, k1=_BM25_K1, b=_BM25_B, tokd=tokd)
         .orderBy(F.desc("score"), F.asc("doc_id"))
@@ -9597,8 +9515,7 @@ def source_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = _ckpt(
         tokf.groupBy("source", "term").agg(
             F.count("*").cast("double").alias("c")
-        ),
-        "source_kl_drift",
+        )
     )
     vocab = (
         st.groupBy("term")
@@ -10458,8 +10375,7 @@ def source_quality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(mod5 & in_v2, fp(t_v2)).alias("h_mut"),
             F.when(is_new, qm(t_new)).alias("qm_new"),
             F.when(is_new, fp(t_new)).alias("h_new"),
-        ),
-        "source_quality_drift",
+        )
     )
     v1 = base.select(
         "doc_id", "source",
@@ -10826,5 +10742,4 @@ def global_index_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return P.global_row_index(
         docs,
         [F.col("n_chars").desc(), F.col("doc_id").asc()],
-        materialize=lambda f: _ckpt(f, "global_index_audit"),
     ).select("global_idx", "doc_id", "n_chars")

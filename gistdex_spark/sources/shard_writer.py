@@ -62,6 +62,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gistdex_spark.materialize import Materialize, Materializer
 from gistdex_spark.operators.pipeline import global_prefix_sum
 
 
@@ -154,7 +155,7 @@ def _narrow_spans(
     shard_tokens: int,
     content_col: str,
     token_count_col,
-    materialize,
+    materialize: Materialize,
     offset: int = 0,
 ) -> DataFrame:
     """NARROW assignment frame (doc_id, n_tok, start, shard_id): one
@@ -204,9 +205,7 @@ def _narrow_spans(
     # choreography). One evaluated copy serves all three; values are
     # identical (the plan is a deterministic function of the pinned
     # ranged frame).
-    if materialize is not None:
-        spans = materialize(spans)
-    return spans
+    return materialize(spans)
 
 
 def _attach_payload(
@@ -231,7 +230,7 @@ def write_packed_shards(
     shard_tokens: int = 2048,
     content_col: str = "text",
     token_count_col=None,
-    materialize=None,
+    materialize: Materialize | None = None,
     mode: str = "overwrite",
     committer_version: str | None = None,
 ) -> None:
@@ -246,6 +245,11 @@ def write_packed_shards(
     directly: the payload never feeds it, so its branch touches no
     payload bytes at all.
 
+    ``materialize`` takes the writer's narrow checkpoints (the prefix
+    sum's input and ranged frame, then the final spans), and the caller
+    owns their blocks. Without it the writer owns them and releases
+    them on return.
+
     ``df`` must be DETERMINISTIC (stable rows across re-evaluation):
     the narrow spans are frozen by the prefix-sum materialization, but
     the payload branch re-evaluates ``df``'s lineage when it joins back
@@ -255,28 +259,30 @@ def write_packed_shards(
     is written from the spans rather than recomputed from the written
     payload. Pass a materialized (checkpointed/persisted) frame when in
     doubt; every in-repo caller reads deterministic parquet lineage."""
-    spans = _narrow_spans(
-        df, shard_tokens, content_col, token_count_col, materialize
-    )
-    staged = _attach_payload(df, spans, content_col)
-    # Sorting by (shard_id, doc_id) is the SAME total order as doc_id
-    # alone (shard_id is monotone in doc_id) but satisfies the dynamic-
-    # partition writer's required ordering, so no task-side sort is
-    # injected and the in-file doc_id contract never depends on the
-    # injected sort being stable.
-    (
-        _with_committer(
-            staged.repartition("shard_id")
-            .sortWithinPartitions("shard_id", "doc_id")
-            .write.mode(mode),
-            committer_version,
+    with Materializer() as own:
+        spans = _narrow_spans(
+            df, shard_tokens, content_col, token_count_col,
+            materialize or own,
         )
-        .partitionBy("shard_id")
-        .parquet(out_path)
-    )
-    _census_agg(spans).write.mode(mode).parquet(
-        os.path.join(out_path, "_manifest")
-    )
+        staged = _attach_payload(df, spans, content_col)
+        # Sorting by (shard_id, doc_id) is the SAME total order as doc_id
+        # alone (shard_id is monotone in doc_id) but satisfies the
+        # dynamic-partition writer's required ordering, so no task-side
+        # sort is injected and the in-file doc_id contract never depends
+        # on the injected sort being stable.
+        (
+            _with_committer(
+                staged.repartition("shard_id")
+                .sortWithinPartitions("shard_id", "doc_id")
+                .write.mode(mode),
+                committer_version,
+            )
+            .partitionBy("shard_id")
+            .parquet(out_path)
+        )
+        _census_agg(spans).write.mode(mode).parquet(
+            os.path.join(out_path, "_manifest")
+        )
 
 
 def append_packed_shards(
@@ -286,7 +292,7 @@ def append_packed_shards(
     shard_tokens: int = 2048,
     content_col: str = "text",
     token_count_col=None,
-    materialize=None,
+    materialize: Materialize | None = None,
     stored_census: DataFrame | None = None,
     committer_version: str | None = None,
 ) -> None:
@@ -303,78 +309,79 @@ def append_packed_shards(
     must all exceed the stored maximum — the assignment rule is a
     function of the doc_id-ordered stream, so an out-of-order batch
     would need to rewrite history (route it through a full rewrite
-    instead). The guard census is aggregated from the WRITTEN bytes
-    (exact under at-least-once redelivery even if a previous manifest
-    refresh crashed), but reads ONLY the narrow span columns — the
-    payload bytes are never re-read. r14-opt: that ONE census is then
-    reused for the manifest refresh (stored census ⊎ batch aggregation,
-    :func:`_merge_manifests`) instead of a second full-store scan, so
-    an append scans the store's span columns once, not twice. The
-    refreshed manifest still equals the written-bytes census by the
-    disjoint-merge argument (pinned in tests/test_shard_writer.py).
+    instead). The guard is a doc_id-only probe of the batch, so it
+    raises before any tokenize. The guard census is aggregated from
+    the WRITTEN bytes (exact under at-least-once redelivery even if a
+    previous manifest refresh crashed), but reads ONLY the narrow span
+    columns — the payload bytes are never re-read. r14-opt: that ONE
+    census is then reused for the manifest refresh (stored census ⊎
+    batch aggregation, :func:`_merge_manifests`) instead of a second
+    full-store scan, so an append scans the store's span columns once,
+    not twice. The refreshed manifest still equals the written-bytes
+    census by the disjoint-merge argument (pinned in
+    tests/test_shard_writer.py).
+
+    ``materialize``: as for :func:`write_packed_shards`; it also takes
+    the stored census when this call reads it.
 
     ``stored_census``: advanced seam for callers (the streaming mirror)
-    that already aggregated this store's census THIS batch — must be
-    the frame of :func:`read_shard_census` over ``out_path``, current
-    as of this append; anything staler breaks the redelivery guard.
+    that already aggregated and materialized this store's census THIS
+    batch — must be the frame of :func:`read_shard_census` over
+    ``out_path``, current as of this append; anything staler breaks the
+    redelivery guard. It must be materialized: the manifest merge reads
+    it after the batch is written, when a fresh scan would count the
+    batch twice.
 
     ``df`` must be DETERMINISTIC, exactly as for
     :func:`write_packed_shards` (same spans-vs-payload split, same
     hazard).
     """
-    if stored_census is None:
-        stored_census = read_shard_census(spark, out_path)
-    # Shard-count rows; materialized so the guard, the offset scalar and
-    # the manifest merge all read one computed copy (and the manifest
-    # overwrite cannot race its own input scan).
-    stored_census = stored_census.localCheckpoint(eager=True)
-    # ONE agg carries every guard scalar (r15-opt: the monotone guard's
-    # separate full-batch scan is gone too — see below) plus the
-    # torn-store tiling check (r14 ADVICE: with committer v2 a crashed
-    # append can publish partial task output; the max-doc redelivery
-    # guard alone would then drop the replay's missing rows forever).
-    stored = stored_census.agg(
-        F.max("token_end").alias("stream_end"),
-        F.max("doc_to").alias("max_doc"),
-        F.sum("n_tokens").alias("sum_tokens"),
-        F.min("token_start").alias("min_start"),
-    ).first()
-    _check_untorn(stored, out_path)
-    stream_end = int(stored["stream_end"] or 0)
-    max_doc = stored["max_doc"]
-    # Monotone-ingest guard. With a seam the spans are materialized, so
-    # one tiny agg over them replaces a second scan of the batch. Without
-    # one, an agg over the lazy spans would replay the window and offsets
-    # join over the whole batch; a doc_id-only probe of the batch is
-    # cheaper and raises before any tokenize.
-    if max_doc is not None and materialize is None:
-        if df.filter(F.col("doc_id") <= F.lit(max_doc)).select("doc_id").head(1):
+    with Materializer() as own:
+        materialize = materialize or own
+        if stored_census is None:
+            # Shard-count rows, materialized so the guard, the offset
+            # scalar and the manifest merge all read one computed copy.
+            stored_census = materialize(read_shard_census(spark, out_path))
+        # ONE agg carries every guard scalar plus the torn-store tiling
+        # check (r14 ADVICE: with committer v2 a crashed append can
+        # publish partial task output; the max-doc redelivery guard alone
+        # would then drop the replay's missing rows forever).
+        stored = stored_census.agg(
+            F.max("token_end").alias("stream_end"),
+            F.max("doc_to").alias("max_doc"),
+            F.sum("n_tokens").alias("sum_tokens"),
+            F.min("token_start").alias("min_start"),
+        ).first()
+        _check_untorn(stored, out_path)
+        stream_end = int(stored["stream_end"] or 0)
+        max_doc = stored["max_doc"]
+        if max_doc is not None and (
+            df.filter(F.col("doc_id") <= F.lit(max_doc))
+            .select("doc_id")
+            .head(1)
+        ):
             _raise_non_monotone(max_doc)
-    spans = _narrow_spans(
-        df, shard_tokens, content_col, token_count_col, materialize,
-        offset=stream_end,
-    )
-    if max_doc is not None and materialize is not None:
-        min_doc = spans.agg(F.min("doc_id").alias("m")).first()["m"]
-        if min_doc is not None and min_doc <= max_doc:
-            _raise_non_monotone(max_doc)
-    staged = _attach_payload(df, spans, content_col)
-    (
-        _with_committer(
-            staged.repartition("shard_id")
-            .sortWithinPartitions("shard_id", "doc_id")
-            .write.mode("append"),
-            committer_version,
+        spans = _narrow_spans(
+            df, shard_tokens, content_col, token_count_col, materialize,
+            offset=stream_end,
         )
-        .partitionBy("shard_id")
-        .parquet(out_path)
-    )
-    manifest = _merge_manifests(
-        stored_census.unionByName(_census_agg(spans))
-    )
-    manifest.write.mode("overwrite").parquet(
-        os.path.join(out_path, "_manifest")
-    )
+        staged = _attach_payload(df, spans, content_col)
+        (
+            _with_committer(
+                staged.repartition("shard_id")
+                .sortWithinPartitions("shard_id", "doc_id")
+                .write.mode("append"),
+                committer_version,
+            )
+            .partitionBy("shard_id")
+            .parquet(out_path)
+        )
+        manifest = _merge_manifests(
+            stored_census.unionByName(_census_agg(spans))
+        )
+        manifest.write.mode("overwrite").parquet(
+            os.path.join(out_path, "_manifest")
+        )
 
 
 def _raise_non_monotone(max_doc) -> None:

@@ -242,62 +242,61 @@ def stream_shard_append(
         if not batch_df.head(1):
             return
         spark = batch_df.sparkSession
+        from pyspark.errors import AnalysisException  # noqa: PLC0415
+
+        from gistdex_spark.materialize import Materializer  # noqa: PLC0415
         from gistdex_spark.sources.shard_writer import (  # noqa: PLC0415
+            _check_untorn,
             append_packed_shards,
             read_shard_census,
             write_packed_shards,
         )
 
         batch = batch_df.select("doc_id", "text")
-        from pyspark.errors import AnalysisException  # noqa: PLC0415
-
-        try:
-            # ONE store scan per micro-batch (r14-opt): the census is
-            # materialized here, drives the redelivery filter, and is
-            # handed to append_packed_shards (stored_census seam) so the
-            # append's guard + manifest refresh reuse it instead of
-            # re-scanning the store.
-            census = read_shard_census(spark, out_path).localCheckpoint(
-                eager=True
+        # Every checkpoint of this micro-batch (the census, the append's
+        # narrow spans) is released when the batch is done.
+        with Materializer() as m:
+            try:
+                # ONE store scan per micro-batch (r14-opt): the census is
+                # materialized here, drives the redelivery filter, and is
+                # handed to append_packed_shards (stored_census seam) so
+                # the append's guard + manifest refresh reuse it instead
+                # of re-scanning the store.
+                census = m(read_shard_census(spark, out_path))
+            except AnalysisException:
+                # Store not created yet (first batch): PATH_NOT_FOUND /
+                # UNABLE_TO_INFER_SCHEMA. Anything else (corrupt footer,
+                # FS error) must SURFACE — swallowing it would bootstrap
+                # a second store over a readable one.
+                write_packed_shards(
+                    batch, out_path, shard_tokens=shard_tokens,
+                    committer_version="1",
+                )
+                return
+            # One agg for the redelivery scalar AND the torn-store tiling
+            # check — the check must run BEFORE the fresh-empty early
+            # return: a tear that kept the batch's highest doc_id would
+            # otherwise look like "already appended" and freeze the gap
+            # in forever (docstring).
+            stored = census.agg(
+                F.max("doc_to").alias("max_doc"),
+                F.max("token_end").alias("stream_end"),
+                F.sum("n_tokens").alias("sum_tokens"),
+                F.min("token_start").alias("min_start"),
+            ).first()
+            _check_untorn(stored, out_path)
+            max_doc = stored["max_doc"]
+            fresh = (
+                batch.filter(F.col("doc_id") > F.lit(max_doc))
+                if max_doc is not None
+                else batch
             )
-        except AnalysisException:
-            # Store not created yet (first batch): PATH_NOT_FOUND /
-            # UNABLE_TO_INFER_SCHEMA. Anything else (corrupt footer, FS
-            # error) must SURFACE — swallowing it would bootstrap a
-            # second store over a readable one.
-            write_packed_shards(
-                batch, out_path, shard_tokens=shard_tokens,
-                committer_version="1",
+            if not fresh.head(1):
+                return
+            append_packed_shards(
+                spark, fresh, out_path, shard_tokens=shard_tokens,
+                materialize=m, stored_census=census, committer_version="1",
             )
-            return
-        from gistdex_spark.sources.shard_writer import (  # noqa: PLC0415
-            _check_untorn,
-        )
-
-        # One agg for the redelivery scalar AND the torn-store tiling
-        # check — the check must run BEFORE the fresh-empty early
-        # return: a tear that kept the batch's highest doc_id would
-        # otherwise look like "already appended" and freeze the gap in
-        # forever (docstring).
-        stored = census.agg(
-            F.max("doc_to").alias("max_doc"),
-            F.max("token_end").alias("stream_end"),
-            F.sum("n_tokens").alias("sum_tokens"),
-            F.min("token_start").alias("min_start"),
-        ).first()
-        _check_untorn(stored, out_path)
-        max_doc = stored["max_doc"]
-        fresh = (
-            batch.filter(F.col("doc_id") > F.lit(max_doc))
-            if max_doc is not None
-            else batch
-        )
-        if not fresh.head(1):
-            return
-        append_packed_shards(
-            spark, fresh, out_path, shard_tokens=shard_tokens,
-            stored_census=census, committer_version="1",
-        )
 
     writer = (
         docs.writeStream.foreachBatch(handle)

@@ -3,11 +3,12 @@
 
 profile_r14.py with two r15 additions:
   - plans land under plans/r15/
-  - --plans-nockpt <tag>: capture the explain with queries._ckpt
-    monkeypatched to identity, so a checkpointed query's plan shows its
-    FULL lineage instead of the post-checkpoint stub (r14 verdict item
-    "What's wrong #3": localCheckpoint truncates lineage, which made the
-    before/after dumps of _ckpt queries non-evidence). The frame is only
+  - --plans-nockpt <tag>: capture the explain inside an identity
+    materialize scope (gistdex_spark.materialize.scope), so a
+    checkpointed query's plan shows its FULL lineage instead of the
+    post-checkpoint stub (r14 verdict item "What's wrong #3":
+    localCheckpoint truncates lineage, which made the before/after dumps
+    of checkpointing queries non-evidence). The frame is only
     EXPLAINED in this mode, never executed — running a writer query
     without its materialization contract would write an inconsistent
     store, so nockpt capture refuses queries that perform writes during
@@ -29,7 +30,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 # Queries whose build PERFORMS writes / eager driver actions that depend
-# on the _ckpt materialization contract — nockpt capture must skip these
+# on their checkpoints — nockpt capture must skip these
 # (see module docstring).
 WRITER_QUERIES = {
     "shard_write_census",
@@ -50,7 +51,7 @@ def main() -> None:
     ap.add_argument("--plans", default=None,
                     help="write plans/r15/<q>_<tag>.txt explain output")
     ap.add_argument("--plans-nockpt", default=None,
-                    help="EXPLAIN-only capture with _ckpt as identity "
+                    help="EXPLAIN-only capture with checkpoints as identity "
                     "(full pre-checkpoint lineage); writes "
                     "plans/r15/<q>_<tag>.txt; no timing")
     ap.add_argument("--out", default=None)
@@ -63,7 +64,7 @@ def main() -> None:
 
     spark = get_spark("gistdex-profile-r15", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    import gistdex_spark.queries as Q
+    from gistdex_spark import materialize as M
     from gistdex_spark.queries import REGISTRY
 
     names = [n for n in args.queries.split(",") if n]
@@ -80,26 +81,22 @@ def main() -> None:
             f.write(plan)
 
     if args.plans_nockpt:
-        real_ckpt = Q._ckpt
-        try:
-            Q._ckpt = lambda frame, tag="?": frame
-            for name in names:
-                if name in WRITER_QUERIES:
-                    print(f"# {name}: SKIPPED (writer query — nockpt "
-                          f"capture would execute writes without the "
-                          f"materialization contract)",
-                          file=sys.stderr, flush=True)
-                    continue
-                try:
+        for name in names:
+            if name in WRITER_QUERIES:
+                print(f"# {name}: SKIPPED (writer query — nockpt "
+                      f"capture would execute writes without their "
+                      f"checkpoints)",
+                      file=sys.stderr, flush=True)
+                continue
+            try:
+                with M.scope(lambda frame: frame):
                     df = REGISTRY[name](spark, sf_dir)
-                    explain_to(df, name, args.plans_nockpt)
-                    print(f"# {name}: full-lineage plan captured",
-                          file=sys.stderr, flush=True)
-                except Exception as exc:
-                    print(f"# {name}: nockpt capture failed: {exc}",
-                          file=sys.stderr, flush=True)
-        finally:
-            Q._ckpt = real_ckpt
+                explain_to(df, name, args.plans_nockpt)
+                print(f"# {name}: full-lineage plan captured",
+                      file=sys.stderr, flush=True)
+            except Exception as exc:
+                print(f"# {name}: nockpt capture failed: {exc}",
+                      file=sys.stderr, flush=True)
         spark.stop()
         return
 

@@ -12,6 +12,11 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECTNESS = "/root/testdata/sf0.01"
 
 
+def persistent_rdd_ids(spark) -> set[int]:
+    """Ids of the RDDs the session currently persists (checkpoints too)."""
+    return {r.id() for r in spark.sparkContext._jsc.getPersistentRDDs().values()}
+
+
 @pytest.fixture(scope="session")
 def spark():
     from gistdex_spark.session import get_spark

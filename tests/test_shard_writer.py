@@ -20,7 +20,7 @@ from gistdex_spark.sources.shard_writer import (
     write_packed_shards,
 )
 from gistdex_spark.sources.tables import load_table
-from tests.conftest import SF_CORRECTNESS
+from tests.conftest import SF_CORRECTNESS, persistent_rdd_ids
 
 SHARD_TOKENS = 2048
 
@@ -161,6 +161,32 @@ def test_append_converges_to_single_write(spark, tmp_path):
         pos += r["n_tok"]
 
 
+def test_write_without_seam_tokenizes_once_and_releases(spark, tmp_path):
+    """Without a ``materialize`` seam the writer owns its checkpoints:
+    the token count is evaluated once per document (the prefix sum's
+    input is materialized before the range exchange samples it), and no
+    checkpoint outlives the write."""
+    docs = load_table(spark, SF_CORRECTNESS, "documents").select(
+        "doc_id", "text"
+    )
+    n_docs = docs.count()
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("bigint")
+    def n_tok(text):
+        calls.add(1)
+        return len(text.split())
+
+    before = persistent_rdd_ids(spark)
+    out = str(tmp_path / "counted")
+    write_packed_shards(
+        docs, out, shard_tokens=SHARD_TOKENS, token_count_col=n_tok("text")
+    )
+    assert calls.value == n_docs
+    assert persistent_rdd_ids(spark) <= before
+    assert _frame(read_shard_census(spark, out))
+
+
 def test_append_rejects_non_monotone_batch(spark, tmp_path):
     """Assignment is a function of the doc_id-ordered stream: a batch
     containing an id at or below the stored maximum must raise (history
@@ -246,11 +272,15 @@ def test_stream_shard_append_matches_single_write(spark, tmp_path):
         .json(src)
     )
     out = str(tmp_path / "out")
+    before = persistent_rdd_ids(spark)
     q = stream_shard_append(
         stream, out, shard_tokens=SHARD_TOKENS,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
     q.awaitTermination(180)
+    assert not q.isActive
+    # each micro-batch releases its checkpoints when it is done
+    assert persistent_rdd_ids(spark) <= before
 
     batch_df = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
     out_all = str(tmp_path / "all")
