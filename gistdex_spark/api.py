@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gistdex_spark.functions.embedder import embed_text
+from gistdex_spark.materialize import checkpoint
 from gistdex_spark.operators import search as S
 from gistdex_spark.operators.reconstruct import original_content, section_content
 from gistdex_spark.sources.indexer import (
@@ -121,7 +122,7 @@ class GistdexSpark:
         or a Delta/Iceberg DELETE)."""
         remaining = delete_sources(self.chunks(), source_ids)
         if rewrite:
-            remaining = remaining.localCheckpoint()
+            remaining = checkpoint(remaining)
             write_chunk_store(remaining, self.store_path, mode="overwrite")
         return remaining
 

@@ -821,25 +821,6 @@ def simhash_pairs(
     )
 
 
-def _make_cut(spark, checkpoint_dir: str | None):
-    """The per-round/per-level lineage cut. ``localCheckpoint`` keeps the
-    materialized blocks in executor storage — fine on local mode / short
-    jobs; a reliable ``checkpoint_dir`` (HDFS/S3 on a real cluster)
-    switches every cut to ``df.checkpoint()`` so intermediate state
-    survives executor loss on a long multi-level job."""
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-        def cut(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=True)
-    else:
-
-        def cut(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=True)
-
-    return cut
-
-
 def _uf_star_pass(edges: DataFrame, u: str, v: str) -> DataFrame:
     """One filtering-CC level: per-partition union-find over the
     partition's edges, emitting the star forest (node, local-min-root) —
@@ -891,7 +872,6 @@ def connected_components(
     id_a: str = "doc_id_a",
     id_b: str = "doc_id_b",
     max_iter: int = 25,
-    checkpoint_dir: str | None = None,
     strict: bool = False,
     algorithm: str = "filter",
     fit_partition_rows: int = 5_000_000,
@@ -922,12 +902,13 @@ def connected_components(
     ``strict``/``max_iter`` convergence contract). Either way the result
     is the same min-id labeling, invariant to partitioning.
 
-    Lineage is truncated at every level/round (see ``_make_cut``); a
-    reliable ``checkpoint_dir`` makes the cuts executor-loss-safe on a
-    real cluster.
+    Lineage is truncated at every level/round by
+    :func:`~gistdex_spark.materialize.checkpoint`, so the cuts belong to
+    the active materialize scope. A scope of
+    ``lambda df: df.checkpoint(eager=True)`` (after
+    ``setCheckpointDir``) makes them executor-loss-safe on a real
+    cluster.
     """
-    spark = pairs.sparkSession
-    cut = _make_cut(spark, checkpoint_dir)
     # Null endpoints carry no connectivity and would raise inside the
     # per-partition union-find (Python `<` on None); drop them up front —
     # the same silent-skip contract the label-propagation joins had.
@@ -936,7 +917,7 @@ def connected_components(
     ).dropna(how="any")
     if algorithm == "labelprop":
         return _labelprop_components(
-            edges, max_iter=max_iter, strict=strict, cut=cut
+            edges, max_iter=max_iter, strict=strict
         )
 
     def as_labels(star: DataFrame) -> DataFrame:
@@ -954,7 +935,7 @@ def connected_components(
     # and an oversized partition would put its whole edge set in one
     # Python union-find dict. Oversized inputs repartition down to the
     # row budget BEFORE any union-find runs.
-    edges = cut(edges)
+    edges = checkpoint(edges)
     cnt = edges.count()
     if cnt == 0:
         return as_labels(edges)
@@ -985,10 +966,10 @@ def connected_components(
         )
         if needed > n_p or max_rows > fit_partition_rows:
             n_p = max(needed, n_p)
-            edges = cut(edges.repartition(n_p))
+            edges = checkpoint(edges.repartition(n_p))
     levels = 0
     while levels < max_iter:
-        star = cut(_uf_star_pass(edges, "u", "v"))
+        star = checkpoint(_uf_star_pass(edges, "u", "v"))
         levels += 1
         if n_p == 1:
             # this pass saw every membership row — exact global labels
@@ -1016,14 +997,14 @@ def connected_components(
                 .first()[0]
             )
             if max_rows > fit_partition_rows:
-                edges = cut(star.repartition(n_p))
+                edges = checkpoint(star.repartition(n_p))
     else:
         star = edges
     # Distributed finish on the (already star-contracted) graph: its
     # diameter is tiny — alternating node->root hops — so label
     # propagation with pointer jumping converges in a couple of rounds.
     return _labelprop_components(
-        star, max_iter=max_iter, strict=strict, cut=cut
+        star, max_iter=max_iter, strict=strict
     )
 
 
@@ -1031,7 +1012,6 @@ def _labelprop_components(
     pairs_uv: DataFrame,
     max_iter: int,
     strict: bool,
-    cut,
 ) -> DataFrame:
     """Min-id label propagation with pointer jumping over a (u, v) edge
     frame. Each round every node takes the min of its own and its
@@ -1050,7 +1030,7 @@ def _labelprop_components(
     # union of two selects on the same frame would re-evaluate the whole
     # upstream pair generation per branch (Spark has no cross-branch CSE),
     # doubling the most expensive stage of the job.
-    sym = cut(
+    sym = checkpoint(
         pairs.select(
             F.explode(
                 F.array(
@@ -1076,8 +1056,8 @@ def _labelprop_components(
     default_par = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     target = max(1, min(default_par, n_edges // 50_000 + 1))
     if target < default_par:
-        sym = cut(sym.repartition(target))
-    labels = cut(
+        sym = checkpoint(sym.repartition(target))
+    labels = checkpoint(
         sym.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
@@ -1146,7 +1126,7 @@ def _labelprop_components(
             first = None
             fused = step(labels)
             rounds += 1
-        new_labels = cut(fused)
+        new_labels = checkpoint(fused)
         if first is not None:
             first.unpersist()
         changed = new_labels.agg(F.sum("__chg")).first()[0] or 0

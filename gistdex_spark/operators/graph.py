@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gistdex_spark.materialize import checkpoint
+
 ROUND = 6
 
 
@@ -30,7 +32,6 @@ def pagerank(
     id_b: str = "doc_id_b",
     iters: int = 5,
     damping: float = 0.85,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(node, rank) after ``iters`` power iterations over the symmetrized
     pair graph, ranks rounded to 6 dp.
@@ -64,15 +65,13 @@ def pagerank(
     integers). The 1e-15 quantization sits ~9 digits below the final
     6-dp rounding.
 
-    Per-round lineage cuts default to ``localCheckpoint`` (executor
-    memory — local mode / short jobs); a reliable ``checkpoint_dir``
-    switches them to ``checkpoint()`` so a long multi-round job survives
-    executor loss on a real cluster (same contract as
-    dedup.connected_components).
+    Per-round lineage cuts go through
+    :func:`~gistdex_spark.materialize.checkpoint`: an eager
+    local checkpoint owned by the active materialize scope. A scope of
+    ``lambda df: df.checkpoint(eager=True)`` (after ``setCheckpointDir``)
+    makes a long multi-round job survive executor loss on a real cluster
+    (same contract as dedup.connected_components).
     """
-    from gistdex_spark.operators.dedup import _make_cut
-
-    cut = _make_cut(pairs.sparkSession, checkpoint_dir)
     sym = (
         pairs.select(
             F.explode(
@@ -89,14 +88,14 @@ def pagerank(
         .select("e.src", "e.dst")
         .distinct()
     )
-    sym = cut(sym)
+    sym = checkpoint(sym)
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     n = deg.count()
     if n == 0:
         return sym.select(
             F.col("src").alias("node"), F.lit(0.0).alias("rank")
         )
-    ranks = cut(
+    ranks = checkpoint(
         deg.select(F.col("src").alias("node"), F.lit(1.0 / n).alias("rank"))
     )
     # Canonicalize (1 - damping) through a shortest-decimal round-trip:
@@ -113,7 +112,7 @@ def pagerank(
     # (at 10^11 edges, five avoidable edge-frame joins). The widened
     # frame carries one extra int per edge; the per-round work drops to
     # a single rank join + agg.
-    symd = cut(sym.join(deg, "src"))
+    symd = checkpoint(sym.join(deg, "src"))
 
     def one_round(rk: DataFrame) -> DataFrame:
         contribs = symd.join(rk, symd.src == rk.node).select(
@@ -133,8 +132,7 @@ def pagerank(
     # frame exactly ONCE (the contribution join), so a fused pair keeps
     # lineage depth 2 with no cross-branch recompute — unlike CC's
     # label-prop step, no persist is needed — and the cut+job count
-    # halves. The cut itself stays mandatory (analyzer blowup guard;
-    # reliable checkpoint() when checkpoint_dir is set).
+    # halves. The cut itself stays mandatory (analyzer blowup guard).
     done = 0
     while done < iters:
         ranks = one_round(ranks)
@@ -142,7 +140,7 @@ def pagerank(
         if done < iters:
             ranks = one_round(ranks)
             done += 1
-        ranks = cut(ranks)
+        ranks = checkpoint(ranks)
     return ranks.select("node", F.round("rank", ROUND).alias("rank"))
 
 
@@ -150,7 +148,6 @@ def triangle_counts(
     pairs: DataFrame,
     id_a: str = "doc_id_a",
     id_b: str = "doc_id_b",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Per-node triangle participation over an undirected pair list —
     the near-dup graph's clique signal (a template cluster is a clique;
@@ -174,14 +171,10 @@ def triangle_counts(
     times — the same expression-reevaluation class as the round-11
     lambda-inlining fixes, one level up. Measured at sf0.1 (8 cpus,
     min-of-3, same session A/B): 3.0 s -> 2.3 s, and the run variance
-    collapses. Same cut contract as pagerank/connected_components
-    (localCheckpoint by default, reliable ``checkpoint_dir`` on a real
-    cluster).
+    collapses. Same cut contract as pagerank/connected_components (the
+    active materialize scope's checkpoint).
     """
-    from gistdex_spark.operators.dedup import _make_cut
-
-    cut = _make_cut(pairs.sparkSession, checkpoint_dir)
-    e = cut(
+    e = checkpoint(
         pairs.select(
             F.least(id_a, id_b).alias("u"), F.greatest(id_a, id_b).alias("v")
         )

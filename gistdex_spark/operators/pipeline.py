@@ -574,7 +574,7 @@ def curate_with_metrics(docs: DataFrame):
     Observation attaches accumulator-style counters to plan nodes, so
     the gate/kept counts ride jobs that already scan those subtrees
     instead of requiring dedicated `count()` scans. Caveat: this pipeline
-    is not single-job — connected_components runs eager localCheckpoint
+    is not single-job — connected_components runs eager checkpoint
     jobs during construction, which is when the input/gated counters
     actually populate; the `kept` counter lands with the caller's action.
     Read `obs.get` only after an action on result_df and treat the

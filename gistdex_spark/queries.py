@@ -9106,7 +9106,7 @@ def prf_expanded_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     PRF is inherently multi-pass (seed BM25 stats + scoring, expansion,
     sparse stats + scoring = 5 corpus passes), so the corpus is
     tokenized ONCE into a shared cached frame (S.tokenized +
-    localCheckpoint) that every pass reads — the r5->r6 regression on
+    checkpoint) that every pass reads — the r5->r6 regression on
     the denser corpus was pure repeated tokenization. At 100 TB the
     same seam takes persist(DISK_ONLY) or recompute; the caller owns
     the policy (see S.tokenized)."""

@@ -17,13 +17,6 @@ def get_spark(
     cpus: int | str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    # transformWithStateInPandas workers speak protobuf to the JVM; when
-    # the real wheel is absent, install the vendored mini runtime BEFORE
-    # the JVM launches so spawned Python workers inherit it via PYTHONPATH
-    # (a no-op wherever genuine protobuf is installed).
-    from gistdex_spark.vendor import ensure_protobuf
-
-    ensure_protobuf()
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle = int(shuffle_partitions or os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
     builder = (
@@ -100,11 +93,5 @@ def get_spark(
                 "spark.hadoop.fs.file.impl",
                 "gistdexspark.fs.NoForkLocalFileSystem",
             )
-        )
-    # Propagate the (possibly shim-augmented) PYTHONPATH to executor-side
-    # Python workers on a real cluster; local mode inherits it anyway.
-    if os.environ.get("PYTHONPATH"):
-        builder = builder.config(
-            "spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"]
         )
     return builder.getOrCreate()

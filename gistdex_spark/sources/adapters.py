@@ -65,6 +65,7 @@ def _memory_adapter_factory(config: dict) -> StorageAdapter:
             t.name for t in spark.catalog.listTables() if t.isTemporary
         ]:
             df = spark.table(name).unionByName(df, allowMissingColumns=True)
+        # Unowned cut on purpose: the view outlives any materialize scope.
         df.localCheckpoint(eager=True).createOrReplaceTempView(name)
 
     def read(spark: SparkSession, path: str) -> DataFrame:

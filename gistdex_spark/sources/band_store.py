@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gistdex_spark.materialize import checkpoint
 from gistdex_spark.operators.dedup import simhash
 
 # Past this many collected band values the IN-list prefilter stops
@@ -98,7 +99,7 @@ def incremental_pairs_stored(
     width = bits // bands
     mask = (1 << width) - 1
 
-    new_sig = simhash(new, content_col, bits).localCheckpoint(eager=True)
+    new_sig = checkpoint(simhash(new, content_col, bits))
 
     # Bounded band-value collection: one tiny agg over the (already
     # materialized) batch signatures. collect_set per band is bounded by

@@ -87,6 +87,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gistdex_spark.materialize import checkpoint
 from gistdex_spark.operators.dedup import _knn_rank, knn_graph_multitable
 from gistdex_spark.sources.lsh_store import write_lsh_store
 
@@ -495,9 +496,9 @@ def _new_old_candidates(
     # Materialize the probe side ONCE: the pack references it twice
     # (size agg + member join), and re-evaluating L parquet scans per
     # reference was half the profiled cost of the whole update.
-    o = _probe_side(
-        spark, members, table_sets, nbits, n_tables, id_col
-    ).localCheckpoint(eager=True)
+    o = checkpoint(
+        _probe_side(spark, members, table_sets, nbits, n_tables, id_col)
+    )
 
     a = new_sig.select(
         F.col("new_id").alias("id"),
@@ -577,11 +578,11 @@ def incremental_graph_stored(
     # Lineage-cut: the batch signatures feed the IN-list collect, the
     # probe join, and the batch-local graph — one materialization, the
     # band_store discipline.
-    new_sig = new.select(
+    new_sig = checkpoint(new.select(
         F.col(id_col).alias("new_id"),
         F.col("embedding").alias("emb_n"),
         bn.alias("bn"),
-    ).localCheckpoint(eager=True)
+    ))
 
     both_dirs = _new_old_candidates(
         spark, os.path.join(root, "members"), new_sig, k, nbits, n_tables,
@@ -694,8 +695,8 @@ def update_graph_store(
     members-append + edges-replace as ONE atomic version flip (module
     docstring) — r12's append-then-swap had a crash window that left
     members whose neighborhoods were silently missing from every later
-    merge. The merged frame is materialized (localCheckpoint) BEFORE
-    any write so nothing reads from a path being replaced. Returns the
+    merge. The merged frame is materialized (``materialize.checkpoint``)
+    BEFORE any write so nothing reads from a path being replaced. Returns the
     merged edge frame. A pre-r13 flat store is migrated to the
     versioned layout by this call.
 
@@ -797,15 +798,15 @@ def update_graph_store(
         stored_members = spark.read.parquet(members_src).select(
             id_col, "embedding"
         )
-        merged = knn_graph_multitable(
+        merged = checkpoint(knn_graph_multitable(
             stored_members.unionByName(new),
             k=k, nbits=nbits, n_tables=n_tables, id_col=id_col,
-        ).localCheckpoint(eager=True)
+        ))
     else:
-        merged = incremental_graph_stored(
+        merged = checkpoint(incremental_graph_stored(
             spark, path, new, k=k, nbits=nbits, n_tables=n_tables,
             id_col=id_col,
-        ).localCheckpoint(eager=True)
+        ))
 
     # Build the new version: hardlink the old member files (metadata-
     # only), append the batch's member rows, write the merged edges —

@@ -58,6 +58,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gistdex_spark.materialize import checkpoint
 from gistdex_spark.operators.dedup import (
     ROUND,
     minhash_band_keys,
@@ -220,10 +221,9 @@ def _new_old_pairs(
     p0_chars = _validated_geometry(path, num_hashes, bands, n)
     rpb = num_hashes // bands
 
-    new_sig = (
+    new_sig = checkpoint(
         minhash_signatures(_with_doc_id(new, id_col), content_col, num_hashes, n)
         .select("doc_id", "sig", *minhash_band_keys("sig", num_hashes, bands))
-        .localCheckpoint(eager=True)
     )
 
     # ONE agg computes each band's distinct-value COUNT plus a slice of
@@ -422,10 +422,10 @@ def update_minhash_store(
     fresh = new.join(
         stored_ids, F.col(id_col) == F.col("__stored_id"), "left_anti"
     )
-    pairs = incremental_pairs_full(
+    pairs = checkpoint(incremental_pairs_full(
         spark, path, fresh, content_col=content_col, num_hashes=num_hashes,
         bands=bands, n=n, threshold=threshold, id_col=id_col,
-    ).localCheckpoint(eager=True)
+    ))
     if fresh.head(1):
         write_minhash_store(
             fresh, path, content_col=content_col, id_col=id_col,

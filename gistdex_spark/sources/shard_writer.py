@@ -166,7 +166,7 @@ def _narrow_spans(
     the payload column stays OUT of this frame. The previous shape ran
     the prefix sum over (doc_id, payload, n_tok), so the payload rode
     the range exchange AND was materialized wholesale in the prefix
-    sum's localCheckpoint — at 100 TB that checkpoints the entire
+    sum's checkpoint — at 100 TB that checkpoints the entire
     corpus to decide byte offsets that depend only on (doc_id, n_tok).
     Now the checkpoint holds a few dozen bytes per document regardless
     of payload size; ``global_prefix_sum`` still materializes the

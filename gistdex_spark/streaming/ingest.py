@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gistdex_spark.materialize import Materializer, scope
+
 
 def stream_index(
     texts: DataFrame,
@@ -167,30 +169,34 @@ def _neardup_admission(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.head(1):
             return
-        hits = (
-            pairs_of_batch(batch_df)
-            .select(F.col("new_id").alias("doc_id"))
-            .distinct()
-        )
-        survivors = batch_df.join(hits, "doc_id", "left_anti")
-        # Redelivery guard: foreachBatch is at-least-once (a crash
-        # between the append and the batch commit replays the batch), so
-        # anti-join against the ids ALREADY in the accepted store —
-        # exactly the idempotence contract stream_index keeps via its
-        # store anti-join. First batch: no store yet.
-        spark = batch_df.sparkSession
-        from pyspark.errors import AnalysisException
+        # The pair probe's checkpoints are released with the batch.
+        with Materializer() as m, scope(m):
+            hits = (
+                pairs_of_batch(batch_df)
+                .select(F.col("new_id").alias("doc_id"))
+                .distinct()
+            )
+            survivors = batch_df.join(hits, "doc_id", "left_anti")
+            # Redelivery guard: foreachBatch is at-least-once (a crash
+            # between the append and the batch commit replays the
+            # batch), so anti-join against the ids ALREADY in the
+            # accepted store — exactly the idempotence contract
+            # stream_index keeps via its store anti-join. First batch:
+            # no store yet.
+            spark = batch_df.sparkSession
+            from pyspark.errors import AnalysisException
 
-        try:
-            existing = spark.read.parquet(out_path).select("doc_id")
-            survivors = survivors.join(existing, "doc_id", "left_anti")
-        except AnalysisException:
-            # Store not created yet (first batch): PATH_NOT_FOUND /
-            # UNABLE_TO_INFER_SCHEMA. Anything else (corrupt footer, FS
-            # error) must SURFACE — swallowing it would silently disable
-            # the idempotence guard and let a replay append duplicates.
-            pass
-        survivors.write.mode("append").parquet(out_path)
+            try:
+                existing = spark.read.parquet(out_path).select("doc_id")
+                survivors = survivors.join(existing, "doc_id", "left_anti")
+            except AnalysisException:
+                # Store not created yet (first batch): PATH_NOT_FOUND /
+                # UNABLE_TO_INFER_SCHEMA. Anything else (corrupt footer,
+                # FS error) must SURFACE — swallowing it would silently
+                # disable the idempotence guard and let a replay append
+                # duplicates.
+                pass
+            survivors.write.mode("append").parquet(out_path)
 
     writer = (
         docs.writeStream.foreachBatch(handle)
@@ -244,7 +250,6 @@ def stream_shard_append(
         spark = batch_df.sparkSession
         from pyspark.errors import AnalysisException  # noqa: PLC0415
 
-        from gistdex_spark.materialize import Materializer  # noqa: PLC0415
         from gistdex_spark.sources.shard_writer import (  # noqa: PLC0415
             _check_untorn,
             append_packed_shards,
@@ -369,10 +374,12 @@ def stream_graph_update(
         fresh = batch_df.join(existing, id_col, "left_anti")
         if not fresh.head(1):
             return
-        update_graph_store(
-            spark, store_path, fresh, k=k, nbits=nbits, n_tables=n_tables,
-            id_col=id_col,
-        )
+        # The merge's checkpoints are released with the batch.
+        with Materializer() as m, scope(m):
+            update_graph_store(
+                spark, store_path, fresh, k=k, nbits=nbits, n_tables=n_tables,
+                id_col=id_col,
+            )
 
     writer = (
         emb.writeStream.foreachBatch(handle)

@@ -8,7 +8,7 @@ evidence — the same operator timings on 10x data every round, so a
 super-linear blowup in the dedup/ANN/retrieval families shows up as a
 round-over-round regression instead of a design claim.
 
-Corpus: the round-6 exp_sf1 generator, kept verbatim — each replica
+Corpus: `generate` below (the round-6 sf1 generator) — each replica
 suffixes every token and perturbs one embedding dimension so replicas are
 INDEPENDENT corpora (plain duplication would make every replica group a
 near-dup cluster and inflate the pair graph 100x). Only documents and
@@ -30,6 +30,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 BASE = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".sf1")
 SF1_DIR = os.path.join(BASE, "multi")
+SF01 = "/root/testdata/sf0.1"
+REPLICAS = 10
 
 # The ten heaviest registry queries of the r6 bench (all documents/
 # embeddings-only; fixed-vec-id lookups like ann_ivf_trained excluded —
@@ -115,10 +117,57 @@ HEAVY = [
 ]
 
 
+def generate(spark) -> None:
+    """Write REPLICAS independent copies of sf0.1's documents and
+    embeddings to SF1_DIR as 32-file parquet."""
+    from pyspark.sql import functions as F  # noqa: PLC0415
+
+    from gistdex_spark.sources.tables import load_table  # noqa: PLC0415
+
+    docs = load_table(spark, SF01, "documents")
+    emb = load_table(spark, SF01, "embeddings")
+    doc_parts = []
+    emb_parts = []
+    for i in range(REPLICAS):
+        # suffix every token so replicas are INDEPENDENT corpora for
+        # simhash (same text would make every replica group a near-dup
+        # cluster and blow the pair count 100x)
+        doc_parts.append(
+            docs.select(
+                (F.col("doc_id") * 10 + F.lit(i)).alias("doc_id"),
+                F.regexp_replace("text", r"(\S+)", f"$1x{i}").alias("text"),
+                "lang",
+                "source",
+            )
+        )
+        # perturb one dimension per replica so vectors are distinct
+        def _perturb(rep):
+            return lambda x, idx: F.when(
+                idx == rep % 8, x + F.lit(0.013 * (rep + 1))
+            ).otherwise(x)
+
+        emb_parts.append(
+            emb.select(
+                (F.col("vec_id") * 10 + F.lit(i)).alias("vec_id"),
+                F.transform("embedding", _perturb(i)).alias("embedding"),
+            )
+        )
+    all_docs = doc_parts[0]
+    for p in doc_parts[1:]:
+        all_docs = all_docs.unionAll(p)
+    all_emb = emb_parts[0]
+    for p in emb_parts[1:]:
+        all_emb = all_emb.unionAll(p)
+    for name, df in (("documents", all_docs), ("embeddings", all_emb)):
+        df.repartition(32).write.mode("overwrite").parquet(
+            f"{SF1_DIR}/{name}.parquet"
+        )
+    print("generated", flush=True)
+
+
 def ensure_corpus() -> None:
     if os.path.exists(os.path.join(SF1_DIR, "documents.parquet")):
         return
-    from exp_sf1 import generate  # noqa: PLC0415 — reuse the r6 generator
     from gistdex_spark.session import get_spark  # noqa: PLC0415
 
     spark = get_spark("sf1-gen", cpus="32")

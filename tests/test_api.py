@@ -189,6 +189,26 @@ def test_delete_source(engine):
     assert remaining.select("source_id").distinct().count() == 2
 
 
+def test_delete_rewrite_keeps_only_remaining_sources(spark, tmp_path):
+    eng = GistdexSpark(spark, str(tmp_path / "chunks"), dim=16)
+    eng.index_text(
+        spark.createDataFrame(
+            [(s, f"text of {s} " * 40, "docs") for s in ("s1", "s2", "s3")],
+            schema="source_id STRING, content STRING, source_type STRING",
+        ),
+        size=120, overlap=0,
+    )
+    kept = eng.chunks().filter(F.col("source_id") != "s2").count()
+    remaining = eng.delete(["s2"], rewrite=True)
+    # the returned frame is cut from the overwritten files
+    assert remaining.count() == kept
+    stored = eng.chunks()
+    assert stored.count() == kept
+    assert {r.source_id for r in stored.select("source_id").distinct().collect()} == {
+        "s1", "s3",
+    }
+
+
 def test_search_strips_embedding(engine):
     """F9: result rows never carry the embedding column."""
     assert "embedding" not in engine.search("vector cosine", k=3).columns

@@ -97,3 +97,18 @@ def test_identity_scope_keeps_full_lineage(spark):
         assert "ExistingRDD" in executed_plan(
             REGISTRY[name](spark, SF_CORRECTNESS)
         ), name
+
+
+def test_store_probe_cuts_belong_to_the_query(spark):
+    """The minhash store probe cuts lineage through the query's scope:
+    each rebuild of a stored-minhash query releases the previous build's
+    checkpoints instead of leaving one more behind."""
+    from gistdex_spark.queries import REGISTRY
+
+    before = persistent_rdd_ids(spark)
+    created = []
+    for _ in range(3):
+        REGISTRY["eval_decontaminate_minhash_stored"](spark, SF_CORRECTNESS)
+        created.append(persistent_rdd_ids(spark) - before)
+    assert len(created[0]) == len(created[1]) == len(created[2]) > 0
+    assert created[0].isdisjoint(created[2])

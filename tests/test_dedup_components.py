@@ -8,6 +8,7 @@ oracle-checked in test_oracle_parity (dedup_components, dedup_survivors).
 
 import pyspark.sql.functions as F
 
+from gistdex_spark import materialize
 from gistdex_spark.operators.dedup import connected_components, dedup_survivors
 
 
@@ -54,13 +55,15 @@ def test_converges_on_long_chain(spark):
 
 
 def test_reliable_checkpoint_mode(spark, tmp_path):
-    # checkpoint_dir switches every lineage cut to reliable checkpoint();
-    # result must be identical and checkpoint files must actually land.
+    # A reliable-checkpoint scope switches every lineage cut to
+    # checkpoint(); result must be identical and checkpoint files must
+    # actually land.
     ckpt = str(tmp_path / "cc_ckpt")
-    cc = connected_components(
-        _pairs(spark, [("a", "b"), ("b", "c"), ("x", "y")]),
-        checkpoint_dir=ckpt,
-    )
+    spark.sparkContext.setCheckpointDir(ckpt)
+    with materialize.scope(lambda df: df.checkpoint(eager=True)):
+        cc = connected_components(
+            _pairs(spark, [("a", "b"), ("b", "c"), ("x", "y")])
+        )
     got = {r["node"]: r["component"] for r in cc.collect()}
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
     import os

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from gistdex_spark import materialize
 from gistdex_spark.operators.graph import pagerank
 
 
@@ -43,15 +44,14 @@ def test_partition_count_invariant(spark, star_pairs):
 
 
 def test_reliable_checkpoint_mode(spark, star_pairs, tmp_path):
-    # checkpoint_dir switches every per-round lineage cut to reliable
-    # checkpoint(); ranks must be identical and files must land.
+    # A reliable-checkpoint scope switches every per-round lineage cut
+    # to checkpoint(); ranks must be identical and files must land.
     import os
 
     ckpt = str(tmp_path / "pr_ckpt")
     a = {(r["node"], r["rank"]) for r in pagerank(star_pairs).collect()}
-    b = {
-        (r["node"], r["rank"])
-        for r in pagerank(star_pairs, checkpoint_dir=ckpt).collect()
-    }
+    spark.sparkContext.setCheckpointDir(ckpt)
+    with materialize.scope(lambda df: df.checkpoint(eager=True)):
+        b = {(r["node"], r["rank"]) for r in pagerank(star_pairs).collect()}
     assert a == b
     assert any(os.scandir(ckpt)), "reliable checkpoint dir must be populated"

@@ -19,7 +19,7 @@ from gistdex_spark.sources.graph_store import (
     write_graph_store,
 )
 from gistdex_spark.sources.tables import load_table
-from tests.conftest import SF_CORRECTNESS
+from tests.conftest import SF_CORRECTNESS, drain
 
 K, NBITS, NT = 3, 4, 3
 
@@ -179,7 +179,7 @@ def test_stream_graph_update_matches_batch_rebuild(spark, split, tmp_path):
         stream, path, k=K, nbits=NBITS, n_tables=NT,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
-    q.awaitTermination(180)
+    drain(q, 180)
 
     got = _frame(
         spark.read.parquet(graph_store.edges_path(path)).select(

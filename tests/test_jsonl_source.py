@@ -12,6 +12,7 @@ from gistdex_spark.sources.jsonl_source import (
     ChunkJsonlReader,
     _list_jsonl,
 )
+from tests.conftest import drain
 
 ROWS = [
     ("s1", 0, "alpha", "en"),
@@ -162,7 +163,7 @@ def test_stream_reads_only_new_files_across_batches(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        drain(q, 120)
 
     def sunk():
         return {
@@ -247,7 +248,7 @@ def test_stream_backlog_drains_in_bounded_batches(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        drain(q, 120)
         return {r.source_id for r in spark.read.parquet(out).collect()}
 
     assert len(run_once()) == 2

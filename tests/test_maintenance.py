@@ -10,6 +10,7 @@ from gistdex_spark.sources.maintenance import (
     compact_store,
     merge_upsert,
 )
+from tests.conftest import drain
 
 
 def test_compaction_reduces_files_and_preserves_rows(spark, tmp_path):
@@ -86,7 +87,7 @@ def test_landing_zone_lifecycle(spark, tmp_path):
         texts, store, checkpoint_dir=str(tmp_path / "ckpt"),
         query_name="landing_ingest",
     )
-    q.awaitTermination(180)
+    drain(q, 180)
 
     chunks = spark.read.parquet(store)
     n = chunks.count()

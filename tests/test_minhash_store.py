@@ -19,7 +19,7 @@ from gistdex_spark.sources.minhash_store import (
     write_minhash_store,
 )
 from gistdex_spark.sources.tables import load_table
-from tests.conftest import SF_CORRECTNESS
+from tests.conftest import SF_CORRECTNESS, drain, persistent_rdd_ids
 
 # A loose threshold so the synthetic corpus yields a non-vacuous pair
 # set across all three (old×old / new×old / new×new) categories.
@@ -191,7 +191,7 @@ def test_streaming_admission_matches_batch_decision(spark, tmp_path):
         stream, store, out, threshold=TH,
         checkpoint_dir=str(tmp_path / "mh_ckpt"),
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     got = {r.doc_id for r in spark.read.parquet(out).collect()}
 
     batch = spark.createDataFrame(incoming, "doc_id BIGINT, text STRING")
@@ -210,6 +210,49 @@ def test_streaming_admission_matches_batch_decision(spark, tmp_path):
     }
     assert got == {i for i, _ in incoming} - rejected
     assert 2 in got  # the novel doc was admitted
+
+
+def test_stream_minhash_filter_releases_its_checkpoints(spark, tmp_path):
+    """Every micro-batch's probe checkpoints are released with the
+    batch: after a multi-batch run no RDD the stream created is still
+    persisted."""
+    import json as _json
+    import os
+
+    from gistdex_spark.streaming.ingest import (
+        stream_neardup_filter_minhash_stored,
+    )
+
+    store = str(tmp_path / "mh_store")
+    write_minhash_store(
+        spark.createDataFrame(
+            [(100, "the quick brown fox jumps over the lazy dog " * 10)],
+            "doc_id BIGINT, text STRING",
+        ),
+        store,
+    )
+    src = str(tmp_path / "mh_src")
+    os.makedirs(src)
+    for b, rows in enumerate([
+        [(1, "the quick brown fox jumps over the lazy dog " * 10 + "x")],
+        [(2, "completely different content about spark streaming " * 10)],
+    ]):
+        with open(f"{src}/b{b}.json", "w") as f:
+            for i, t in rows:
+                f.write(_json.dumps({"doc_id": i, "text": t}) + "\n")
+    stream = (
+        spark.readStream.schema("doc_id BIGINT, text STRING")
+        .option("maxFilesPerTrigger", 1)
+        .json(src)
+    )
+    before = persistent_rdd_ids(spark)
+    q = stream_neardup_filter_minhash_stored(
+        stream, store, str(tmp_path / "mh_out"), threshold=TH,
+        checkpoint_dir=str(tmp_path / "mh_ckpt"),
+    )
+    drain(q, 120)
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 2
+    assert persistent_rdd_ids(spark) <= before
 
 
 def test_append_then_probe_still_exact(spark, split, tmp_path_factory):

@@ -20,7 +20,7 @@ from gistdex_spark.sources.shard_writer import (
     write_packed_shards,
 )
 from gistdex_spark.sources.tables import load_table
-from tests.conftest import SF_CORRECTNESS, persistent_rdd_ids
+from tests.conftest import SF_CORRECTNESS, drain, persistent_rdd_ids
 
 SHARD_TOKENS = 2048
 
@@ -277,8 +277,7 @@ def test_stream_shard_append_matches_single_write(spark, tmp_path):
         stream, out, shard_tokens=SHARD_TOKENS,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
-    q.awaitTermination(180)
-    assert not q.isActive
+    drain(q, 180)
     # each micro-batch releases its checkpoints when it is done
     assert persistent_rdd_ids(spark) <= before
 
@@ -297,7 +296,7 @@ def test_stream_shard_append_matches_single_write(spark, tmp_path):
         stream2, out, shard_tokens=SHARD_TOKENS,
         checkpoint_dir=str(tmp_path / "ckpt2"),  # fresh ckpt = redelivery
     )
-    q2.awaitTermination(180)
+    drain(q2, 180)
     assert spark.read.parquet(out).count() == n_before
     assert _frame(read_shard_census(spark, out)) == got
 

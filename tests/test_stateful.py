@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from gistdex_spark.sources.tables import load_table
 from gistdex_spark.streaming.events import as_event_time
 from gistdex_spark.streaming.stateful import sessionize_stream
+from tests.conftest import drain
 
 SF = "/root/testdata/sf0.001"
 
@@ -22,15 +23,26 @@ def test_stateful_sessionize_matches_batch(spark):
     )
     stream, batch = as_event_time(stream), as_event_time(batch)
 
-    q = (
-        sessionize_stream(stream)
-        .writeStream.format("memory")
-        .queryName("sessions_state")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+    # Without this the processing-time timeout keeps scheduling no-data
+    # batches and the availableNow query never ends (sessionize_stream).
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    try:
+        q = (
+            sessionize_stream(stream)
+            .writeStream.format("memory")
+            .queryName("sessions_state")
+            .outputMode("update")
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    drain(q, 180)
 
     # latest state per user (update mode may emit multiple rows per user)
     got = {
@@ -72,7 +84,7 @@ def test_stateful_transitions_match_batch(spark):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    drain(q, 180)
 
     got = {
         (r.prev_type, r.next_type): r.total

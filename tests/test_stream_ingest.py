@@ -7,6 +7,7 @@ import json
 
 from gistdex_spark.api import GistdexSpark
 from gistdex_spark.streaming.ingest import stream_index
+from tests.conftest import drain
 
 
 def _write_docs_json(spark, path, rows):
@@ -41,7 +42,7 @@ def test_stream_ingest_matches_batch_store(spark, tmp_path):
         str(tmp_path / "stream_store"),
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
-    q.awaitTermination(120)
+    drain(q, 120)
 
     batch_engine = GistdexSpark(spark, str(tmp_path / "batch_store"))
     batch_engine.index_text(
@@ -73,7 +74,7 @@ def test_stream_ingest_redelivery_is_idempotent(spark, tmp_path):
         _read_stream(spark, src), store,
         checkpoint_dir=str(tmp_path / "ckpt1"),
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     n1 = GistdexSpark(spark, store).chunks().count()
 
     # Re-deliver the same sources through a FRESH checkpoint (simulated
@@ -82,7 +83,7 @@ def test_stream_ingest_redelivery_is_idempotent(spark, tmp_path):
         _read_stream(spark, src), store,
         checkpoint_dir=str(tmp_path / "ckpt2"),
     )
-    q2.awaitTermination(120)
+    drain(q2, 120)
     n2 = GistdexSpark(spark, store).chunks().count()
     assert n1 == n2 and n1 > 0
 
@@ -121,7 +122,7 @@ def test_stream_neardup_filter_matches_batch(spark, tmp_path):
         stream, static_docs, out,
         checkpoint_dir=str(tmp_path / "nd_ckpt"),
     )
-    q.awaitTermination(120)
+    drain(q, 120)
 
     got = {r.doc_id for r in spark.read.parquet(out).collect()}
 
@@ -143,7 +144,7 @@ def test_stream_neardup_filter_matches_batch(spark, tmp_path):
         stream, static_docs, out,
         checkpoint_dir=str(tmp_path / "nd_ckpt2"),
     )
-    q2.awaitTermination(120)
+    drain(q2, 120)
     rows = spark.read.parquet(out).collect()
     assert len(rows) == len({r.doc_id for r in rows}), "duplicate appends"
     assert {r.doc_id for r in rows} == expected
@@ -184,7 +185,7 @@ def test_stream_neardup_filter_stored_matches_recompute_form(spark, tmp_path):
             .selectExpr("CAST(source_id AS BIGINT) AS doc_id", "content AS text")
         )
         q = factory(stream, out, ckpt)
-        q.awaitTermination(120)
+        drain(q, 120)
         return {r.doc_id for r in spark.read.parquet(out).collect()}
 
     got_stored = run(

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from gistdex_spark.sources.tables import load_table
 from gistdex_spark.streaming.events import as_event_time, run_availablenow
 from gistdex_spark.streaming.joins import stream_interval_join
+from tests.conftest import drain
 
 SF = "/root/testdata/sf0.001"
 
@@ -38,7 +39,7 @@ def test_stream_interval_join_matches_batch(spark):
         "stream_join_test",
         "append",
     )
-    q.awaitTermination(180)
+    drain(q, 180)
     got = {
         (r.l_event_id, r.r_event_id)
         for r in spark.sql("SELECT * FROM stream_join_test").collect()
@@ -105,7 +106,7 @@ def test_stream_interval_join_left_outer_emits_after_watermark(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(180)
+        drain(q, 180)
         import os
 
         if not os.path.isdir(out):

@@ -13,6 +13,7 @@ from gistdex_spark.streaming.events import (
     hourly_counts_stream,
     run_availablenow,
 )
+from tests.conftest import drain
 
 SF = "/root/testdata/sf0.001"
 
@@ -34,7 +35,7 @@ def test_hourly_counts_stream_matches_batch(spark):
     q = run_availablenow(
         hourly_counts_stream(stream_src), "hourly_test", "append"
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     got = {
         (r.hour, r.event_type): (r.n_events, r.total_value)
         for r in spark.sql("SELECT * FROM hourly_test").collect()
@@ -64,7 +65,7 @@ def test_hourly_counts_stream_matches_batch(spark):
 def test_dedup_stream_unique_ids(spark):
     stream_src, batch = _stream_events(spark)
     q = run_availablenow(dedup_stream(stream_src), "dedup_test", "append")
-    q.awaitTermination(120)
+    drain(q, 120)
     out = spark.sql("SELECT event_id FROM dedup_test").collect()
     ids = [r.event_id for r in out]
     assert len(ids) == len(set(ids)), "duplicate event_id in deduped stream"
@@ -78,7 +79,7 @@ def test_sliding_counts_stream_matches_batch(spark):
     q = run_availablenow(
         sliding_counts_stream(stream_src), "sliding_test", "append"
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     got = {
         (r.window_start_us, r.event_type): (r.n_events, r.total_value)
         for r in spark.sql("SELECT * FROM sliding_test").collect()
@@ -108,7 +109,7 @@ def test_dedup_within_watermark_matches_batch_distinct(spark):
     q = run_availablenow(
         dedup_within_watermark_stream(stream_src), "dedup_ww_test", "append"
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     got = spark.sql("SELECT count(*) AS n, count(DISTINCT event_id) AS d "
                     "FROM dedup_ww_test").collect()[0]
     expected = batch.select("event_id").distinct().count()
@@ -127,7 +128,7 @@ def test_enrich_stream_matches_batch_join(spark):
     q = run_availablenow(
         enrich_stream(stream_src, dim), "enrich_test", "append"
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     got = {
         (r.category,): r.n
         for r in spark.sql(

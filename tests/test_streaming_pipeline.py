@@ -12,6 +12,7 @@ from gistdex_spark.operators.pipeline import (
 )
 from gistdex_spark.sources.tables import load_table
 from gistdex_spark.streaming.events import run_availablenow
+from tests.conftest import drain
 
 SF = "/root/testdata/sf0.001"
 
@@ -31,7 +32,7 @@ def test_quality_gate_stream_matches_batch(spark):
     q = run_availablenow(
         repetition_stats(stream_src), "quality_stream_test", "append"
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     got = {
         r.doc_id: (r.unique_frac, r.top_word_frac, r.quality_pass)
         for r in spark.sql("SELECT * FROM quality_stream_test").collect()
@@ -49,7 +50,7 @@ def test_pii_and_split_stream_matches_batch(spark):
         pii_redact(df, "text")
     ).select("doc_id", "n_emails", "n_digit_runs", "split")
     q = run_availablenow(pipe(stream_src), "pii_split_stream_test", "append")
-    q.awaitTermination(120)
+    drain(q, 120)
     got = {
         r.doc_id: (r.n_emails, r.n_digit_runs, r.split)
         for r in spark.sql("SELECT * FROM pii_split_stream_test").collect()
