@@ -25,11 +25,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from gistdex_spark.functions.embedder import embed_text
 from gistdex_spark.materialize import checkpoint
 from gistdex_spark.operators import search as S
 from gistdex_spark.operators.reconstruct import original_content, section_content
+from gistdex_spark.sources.adapters import PARTITION_COL
 from gistdex_spark.sources.indexer import (
     delete_sources,
     incremental_filter,
@@ -46,6 +48,9 @@ class GistdexSpark:
         self.spark = spark
         self.store_path = store_path
         self.dim = dim
+        # The store's schema from its first read. Later reads pass it in,
+        # which skips parquet's schema inference, a Spark job per read.
+        self._schema: StructType | None = None
 
     # -- ingestion ---------------------------------------------------------
 
@@ -75,7 +80,7 @@ class GistdexSpark:
         chunks = index_text_df(
             texts, strategy=strategy, size=size, overlap=overlap, dim=self.dim
         )
-        write_chunk_store(chunks, self.store_path)
+        self._write(chunks)
         return chunks
 
     def index_files(
@@ -101,13 +106,22 @@ class GistdexSpark:
             size=size,
             overlap=overlap,
         )
-        write_chunk_store(chunks, self.store_path)
+        self._write(chunks)
         return chunks
+
+    def _write(self, chunks: DataFrame, mode: str = "append") -> None:
+        write_chunk_store(chunks, self.store_path, mode=mode)
+        if self._schema is not None:
+            self._schema = _with_written(self._schema, chunks.schema)
 
     # -- core tables -------------------------------------------------------
 
     def chunks(self) -> DataFrame:
-        return self.spark.read.parquet(self.store_path)
+        if self._schema is not None:
+            return self.spark.read.schema(self._schema).parquet(self.store_path)
+        df = self.spark.read.parquet(self.store_path)
+        self._schema = df.schema
+        return df
 
     def sources(self) -> DataFrame:
         return sources_from_chunks(self.chunks())
@@ -123,7 +137,7 @@ class GistdexSpark:
         remaining = delete_sources(self.chunks(), source_ids)
         if rewrite:
             remaining = checkpoint(remaining)
-            write_chunk_store(remaining, self.store_path, mode="overwrite")
+            self._write(remaining, mode="overwrite")
         return remaining
 
     # -- search ------------------------------------------------------------
@@ -194,3 +208,21 @@ class GistdexSpark:
         if predicate is not None:
             df = df.filter(predicate)
         return df.count()
+
+
+def _with_written(stored: StructType, written: StructType) -> StructType | None:
+    """The store's schema once ``written`` has been added to a store read
+    as ``stored``: columns new to the store join before the partition
+    column, which a read returns last. None when a column changes type,
+    so the next read infers again. (A bare re-read would not do here: it
+    infers from one file and misses a column only newer files carry.)"""
+    types = {f.name: f.dataType.simpleString() for f in stored.fields}
+    # simpleString leaves nullability out; a read makes every column nullable
+    if any(types.get(f.name, f.dataType.simpleString()) != f.dataType.simpleString()
+           for f in written.fields):
+        return None
+    fields = stored.fields + [f for f in written.fields if f.name not in types]
+    return StructType(
+        [f for f in fields if f.name != PARTITION_COL]
+        + [f for f in fields if f.name == PARTITION_COL]
+    )

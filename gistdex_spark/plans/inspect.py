@@ -8,7 +8,8 @@ job here; these helpers let tests PIN the properties we rely on at 100 TB:
 - scans read only the projected columns (``ReadSchema``),
 - top-k compiles to ``TakeOrderedAndProject`` (heap, no global sort),
 - small dims broadcast (no accidental sort-merge join),
-- an operator's shuffle count stays at its designed number.
+- an operator's shuffle count stays at its designed number,
+- a repeated query compiles no generated class again.
 
 A plan regression (e.g. a refactor that breaks pushdown) then fails CI
 instead of silently costing a full-scan at scale.
@@ -17,8 +18,9 @@ instead of silently costing a full-scan at scale.
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def executed_plan(df: DataFrame) -> str:
@@ -39,19 +41,33 @@ def optimized_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
-def collect_jobs(df: DataFrame, group: str) -> int:
-    """Collect ``df`` under its own job group; return how many Spark jobs
-    the collect ran (plan building outside the group is not counted)."""
-    sc = df.sparkSession.sparkContext
+def jobs_run(spark: SparkSession, group: str, fn: Callable[[], object]) -> int:
+    """Call ``fn`` under its own job group; return how many Spark jobs it
+    ran (work outside the call is not counted)."""
+    sc = spark.sparkContext
     old = sc.getLocalProperty("spark.jobGroup.id")
     sc.setJobGroup(group, group)
     try:
-        df.collect()
+        fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", old)
     # the status store is filled from the listener bus, asynchronously
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def collect_jobs(df: DataFrame, group: str) -> int:
+    """Collect ``df`` under its own job group; return how many Spark jobs
+    the collect ran (plan building outside the group is not counted)."""
+    return jobs_run(df.sparkSession, group, df.collect)
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes this JVM has compiled so far. Spark counts one
+    Janino compile per miss of its generated-code cache, so an unchanged
+    count across a repeated query means every class was reused."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def scans(df: DataFrame) -> list[dict]:

@@ -11,6 +11,17 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Spark's generated-code cache (compiled classes keyed by source text)
+# defaults to 100 entries in 4 LRU segments of ~25. The curate chain
+# (quality gate -> SimHash pairs -> components -> survivors -> packed
+# shard write -> census, `curated_shard_write_census`) needs 99 classes,
+# so a back-to-back rerun at sf0.01 compiled 21 of them again, with
+# Janino and then the JIT. An index-and-search facade loop compiled 41
+# classes in its first two writes and first op, then 2 new ones per op.
+# 1000 holds both working sets. Static conf: it takes effect only in a
+# JVM this call starts.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def get_spark(
     app_name: str = "gistdex-spark",
@@ -33,6 +44,12 @@ def get_spark(
         # Let Python DataSources (sources/jsonl_source.py) absorb filters.
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # Keep the codegen stage id out of generated class names. Under AQE
+        # stages get their ids in the order they materialize, which varies
+        # between runs, so the same code under a swapped name missed the
+        # cache (corpus_curation_funnel_blocked: 4 recompiles on a rerun).
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # events.parquet carries TIMESTAMP(NANOS); read as LONG nanos and
         # convert in the loader (Spark has no nanos timestamp type).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -35,6 +35,9 @@ class StorageAdapter:
 
 AdapterFactory = Callable[[dict], StorageAdapter]
 
+# The chunk store's partition column; a read of the store returns it last.
+PARTITION_COL = "source_type"
+
 
 def _format_adapter(provider: str, fmt: str, partition: bool) -> AdapterFactory:
     def factory(config: dict) -> StorageAdapter:
@@ -42,8 +45,8 @@ def _format_adapter(provider: str, fmt: str, partition: bool) -> AdapterFactory:
 
         def write(df: DataFrame, path: str, mode: str = "append") -> None:
             w = df.write.mode(mode).format(fmt).options(**opts)
-            if partition and "source_type" in df.columns:
-                w = w.partitionBy("source_type")
+            if partition and PARTITION_COL in df.columns:
+                w = w.partitionBy(PARTITION_COL)
             w.save(path)
 
         def read(spark: SparkSession, path: str) -> DataFrame:

@@ -131,9 +131,33 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     operator keeps the knob rather than assuming scan parallelism.
     """
     n = partitions or df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= n:
+    have = _planned_partitions(df)
+    if have is None:
+        # On a scan this lists splits on the driver; above an exchange,
+        # AQE runs the upstream stages to learn the count.
+        have = df.rdd.getNumPartitions()
+    if have >= n:
         return df  # already parallel enough — skip the exchange entirely
     return df.repartition(n)
+
+
+def _planned_partitions(df: DataFrame) -> int | None:
+    """The partition count an explicit-count repartition fixes, read off
+    the optimized plan when only projections and filters sit above it
+    (AQE never coalesces such an exchange); None for any other plan.
+    A range repartition is left to the probe: its sampled bounds can
+    yield fewer partitions than asked for."""
+    node = df._jdf.queryExecution().optimizedPlan()
+    while node.nodeName() in ("Project", "Filter"):
+        node = node.child()
+    if node.nodeName() == "Repartition" and node.shuffle():
+        return node.numPartitions()
+    if (node.nodeName() == "RepartitionByExpression"
+            and node.partitioning().getClass().getSimpleName() != "RangePartitioning"):
+        count = node.optNumPartitions()
+        if count.isDefined():
+            return count.get()
+    return None
 
 
 def corpus(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -52,8 +52,13 @@ def track_sessions(
     """Fold this micro-batch's events into the user's running session state.
 
     Events inside a batch are sorted by timestamp; a gap > 30 min (against
-    state carried across batches) opens a new session.
+    state carried across batches) opens a new session. A user idle for
+    the whole gap times out: the state is dropped and no row is emitted,
+    so a later event starts the user's counters afresh.
     """
+    if state.hasTimedOut:
+        state.remove()
+        return
     (user_id,) = key
     if state.exists:
         n_events, n_sessions, last_ts = state.get
@@ -91,8 +96,8 @@ def sessionize_stream(events):
     finishes on its own (measured on sf0.001: still active after 200 s,
     hundreds of no-data batches). Set
     ``spark.sql.streaming.noDataMicroBatches.enabled=false`` before
-    ``start()`` to drain a backlog and stop; idle sessions then expire
-    only when a later batch brings data.
+    ``start()`` to drain a backlog and stop; idle users' state then
+    expires only when a later batch brings data.
     """
     return (
         events.selectExpr("CAST(user_id AS STRING) AS user_id", "ts")

@@ -176,6 +176,51 @@ def test_incremental_index_skips_existing(engine, spark):
     assert engine.count() == before
 
 
+def test_search_build_after_first_read_runs_no_job(spark, tmp_path):
+    """The store schema is kept from the first read, so building a search
+    plans without a job. Before, every build re-read the store and ran
+    parquet's schema inference (1 job per search)."""
+    from gistdex_spark.plans.inspect import jobs_run
+
+    eng = GistdexSpark(spark, str(tmp_path / "chunks"), dim=16)
+    eng.index_text(
+        spark.createDataFrame(
+            [(s, f"text of {s} " * 40, t) for s, t in (("s1", "docs"), ("s2", "code"))],
+            schema="source_id STRING, content STRING, source_type STRING",
+        ),
+        size=120, overlap=0,
+    )
+    eng.chunks()
+    for i, kw in enumerate([{}, {"hybrid": True}, {"source_type": "code"}]):
+        assert jobs_run(spark, f"test-search-build-{i}", lambda: eng.search("text", **kw)) == 0
+    assert eng.search("text", k=10).count() == eng.count()
+
+
+def test_index_files_column_visible_to_next_read(spark, tmp_path):
+    """A write that adds a column (index_files' file_path) widens the kept
+    schema. Before, the re-read inferred the schema from one file of the
+    older partition and did not show file_path at all."""
+    eng = GistdexSpark(spark, str(tmp_path / "chunks"), dim=16)
+    eng.index_text(
+        spark.createDataFrame(
+            [("s1", "text of s1 " * 40, "docs")],
+            schema="source_id STRING, content STRING, source_type STRING",
+        ),
+        size=120, overlap=0,
+    )
+    n_text = eng.count()
+    doc = tmp_path / "doc.txt"
+    doc.write_text("word " * 400)
+    n_file = eng.index_files(
+        str(doc), base_dir=str(tmp_path), allowed_base_paths=(str(tmp_path),),
+        size=200, overlap=0,
+    ).count()
+    stored = eng.chunks()
+    assert stored.columns[-2:] == ["file_path", "source_type"]
+    assert stored.filter(F.col("file_path").isNotNull()).count() == n_file
+    assert stored.count() == n_text + n_file
+
+
 def test_stats_and_point_lookup(engine):
     stats = {r.source_type: r.n_chunks for r in engine.stats().collect()}
     assert set(stats) == {"docs", "code"}

@@ -7,12 +7,15 @@ from __future__ import annotations
 import re
 
 import pytest
+from pyspark.sql import functions as F
 
 from gistdex_spark.plans.inspect import (
+    codegen_compiles,
     collect_jobs,
     executed_plan,
     final_plan,
     has_take_ordered,
+    jobs_run,
     join_strategies,
     num_shuffles,
     optimized_plan,
@@ -21,6 +24,7 @@ from gistdex_spark.plans.inspect import (
     single_partition_exchanges,
 )
 from gistdex_spark.queries import REGISTRY
+from gistdex_spark.sources.tables import load_table, spread
 from tests.conftest import SF_CORRECTNESS
 
 
@@ -87,6 +91,23 @@ def test_search_collect_is_one_job(engine):
     for i, kw in enumerate(_SEARCH_MODES):
         df = engine.search("spark join", k=3, **kw)
         assert collect_jobs(df, f"test-search-jobs-{i}") == 1, kw
+
+
+def test_spread_reads_repartition_count_off_the_plan(spark):
+    """A frame already round-robined to enough partitions passes through
+    with no job; before, learning the count ran the upstream shuffle as
+    its own job (1 job here). A 1-split scan still gets spread, and so
+    does a range repartition that found fewer bounds than it asked for."""
+    docs = load_table(spark, SF_CORRECTNESS, "documents")
+    spread_in = docs.repartition(3).filter(F.length("text") > 0)
+    out = []
+    assert jobs_run(spark, "test-spread-jobs", lambda: out.append(spread(spread_in, 3))) == 0
+    assert out[0] is spread_in
+    assert docs.rdd.getNumPartitions() == 1
+    assert spread(docs, 3).rdd.getNumPartitions() == 3
+    ranged = docs.select((F.col("doc_id") % 2).alias("x")).repartitionByRange(8, "x")
+    assert ranged.rdd.getNumPartitions() < 8
+    assert spread(ranged, 8).rdd.getNumPartitions() == 8
 
 
 def test_lang_filter_pushed_to_scan(q):
@@ -965,3 +986,31 @@ def test_ann_int8_is_two_heaps_no_shuffle(q):
     assert num_shuffles(df) == 0
     s = scan_for(df, "embeddings")
     assert set(s["columns"]) <= {"vec_id", "embedding"}
+
+
+# Heavy registry compositions: the curate chain (99 generated classes),
+# the blocked curation funnel and the fused hybrid search.
+_COMPILE_BUDGET = (
+    "curated_shard_write_census",
+    "corpus_curation_funnel_blocked",
+    "hybrid_rrf",
+)
+
+
+@pytest.fixture(scope="module")
+def compiled_once(q):
+    for name in _COMPILE_BUDGET:
+        q(name).collect()
+
+
+@pytest.mark.parametrize("name", _COMPILE_BUDGET)
+def test_repeated_query_compiles_nothing(spark, q, compiled_once, name):
+    """A second build and collect reuses every generated class the session
+    already compiled. With Spark's default 100-entry code cache the three
+    compositions evicted each other's classes, and the reruns compiled
+    89, 79 and 30 classes again. With codegen stage ids in class names,
+    the funnel's rerun also compiled 4 classes that differed only in a
+    stage number AQE hands out in materialization order."""
+    before = codegen_compiles(spark)
+    q(name).collect()
+    assert codegen_compiles(spark) - before == 0

@@ -154,3 +154,31 @@ def test_track_transitions_state_carries_across_batches():
     assert out2[["prev_type", "next_type", "n"]].values.tolist() == [
         ["click", "purchase", 1]
     ]
+
+
+def test_track_sessions_timeout_drops_state_and_emits_nothing():
+    """A timeout call (no events) removes the user's state and emits no
+    row. Before, it re-wrote the same state, re-armed the timeout and
+    emitted a duplicate row, so idle users' state never expired."""
+    from gistdex_spark.streaming.stateful import track_sessions
+
+    class TimedOutState:
+        exists = True
+        hasTimedOut = True
+        get = (5, 2, 1_700_000_000)
+
+        def __init__(self):
+            self.calls = []
+
+        def update(self, v):
+            self.calls.append("update")
+
+        def setTimeoutDuration(self, ms):
+            self.calls.append("setTimeoutDuration")
+
+        def remove(self):
+            self.calls.append("remove")
+
+    st = TimedOutState()
+    assert list(track_sessions(("7",), iter([]), st)) == []
+    assert st.calls == ["remove"]
