@@ -26,10 +26,10 @@ def entry(spark: SparkSession) -> DataFrame:
     from pyspark.sql import functions as F
 
     from gistdex_spark.operators.search import rerank
-    from gistdex_spark.queries import QN_DOC, QV_DOC, Q_DOC_TEXT, _corpus, with_score
+    from gistdex_spark.queries import QV_DOC, Q_DOC_TEXT, _corpus, with_score
 
     corpus = _corpus(spark, SMOKE_SF_DIR)
-    scored = with_score(corpus, QV_DOC, QN_DOC)
+    scored = with_score(corpus, QV_DOC)
     top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(10)
     return rerank(top, Q_DOC_TEXT, 0.1, content_col="text").select(
         "doc_id", "text", "lang", "source", "score"

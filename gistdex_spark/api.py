@@ -158,7 +158,7 @@ class GistdexSpark:
         corpus = self.chunks()
         if source_type is not None:
             corpus = corpus.filter(F.col("source_type") == source_type)
-        scored = S.with_score(corpus, qv, S.seq_norm(qv))
+        scored = S.with_score(corpus, qv)
         top = scored.orderBy(F.desc("score"), F.asc("id")).limit(k)
         if hybrid:
             top = S.hybrid_score(top, query, keyword_weight, content_col="content")

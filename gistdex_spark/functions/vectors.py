@@ -1,4 +1,4 @@
-"""Vector math over ``ARRAY<FLOAT>`` columns — JVM-side, codegen-friendly.
+"""Vector math over ``ARRAY<FLOAT>`` columns, JVM-side.
 
 Reference semantics: ``cosineSimilarity`` returns dot/(|a||b|), 0 when either
 vector has zero magnitude (reference `src/core/embedding/embedding.ts:143-173`,
@@ -6,10 +6,15 @@ vector has zero magnitude (reference `src/core/embedding/embedding.ts:143-173`,
 index time so score == dot product on its own data; we keep the full cosine
 so arbitrary (non-normalized) embedding columns score correctly too.
 
-All of these compile to Catalyst ``ZipWith``/``ArrayAggregate`` expressions —
-no Python UDF in the hot path, so a 100 TB scan stays inside whole-stage
-codegen. Accumulation is sequential over the array (index order), which makes
-the floating-point result reproducible across engines.
+One builder, :func:`dot_sql`, emits every fold as Spark SQL text:
+``aggregate(zip_with(...))``, accumulated as DOUBLE in index order, so the
+floating-point result is reproducible across engines (:func:`sql_dot` is
+the DuckDB twin). :func:`dot`, :func:`l2_norm` and :func:`cosine` parse it
+with ``F.expr`` in one JVM call each. No Python UDF runs in the hot path,
+but the fold does not enter whole-stage codegen either: higher-order
+functions are CodegenFallback, so the projection that holds a fold runs
+interpreted (the executed plan shows its ``Project`` without a ``*(n)``
+marker). Fold each vector as few times per row as the caller can.
 """
 
 from __future__ import annotations
@@ -19,24 +24,15 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    """Dot product of two array columns, accumulated as DOUBLE in index order."""
-    a, b = F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+def quote(name: str) -> str:
+    """A column name as a Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def spark_dot_sql(a: str, b: str) -> str:
-    """Spark SQL text of :func:`dot` over two named columns, for ``F.expr``.
-
-    It parses to the same Catalyst expression as :func:`dot` (same
-    accumulation order, same bits) in one JVM call, where the lambda form
-    pays a Py4J round trip per lambda node (~80 ms of plan building per
-    fold)."""
-    a, b = (f"`{c.replace('`', '``')}`" for c in (a, b))
+def dot_sql(a: str, b: str) -> str:
+    """Spark SQL text of the dot product of two array expressions (SQL
+    text, not names: lambda variables such as ``c.c_vec`` work too),
+    accumulated as DOUBLE in index order."""
     return (
         f"aggregate(zip_with({a}, {b}, "
         f"(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
@@ -44,24 +40,26 @@ def spark_dot_sql(a: str, b: str) -> str:
     )
 
 
-def l2_norm(a: Column | str) -> Column:
-    return F.sqrt(dot(a, a))
+def dot(a: str, b: str) -> Column:
+    """Dot product of two named array columns."""
+    return F.expr(dot_sql(quote(a), quote(b)))
 
 
-def cosine(a: Column | str, b: Column | str) -> Column:
-    """Cosine similarity with the reference's zero-vector guard (→ 0.0)."""
-    na, nb = l2_norm(a), l2_norm(b)
-    return F.when((na == F.lit(0.0)) | (nb == F.lit(0.0)), F.lit(0.0)).otherwise(
-        dot(a, b) / (na * nb)
-    )
+def l2_norm(a: str) -> Column:
+    q = quote(a)
+    return F.expr(f"sqrt({dot_sql(q, q)})")
 
 
-def normalize(a: Column | str) -> Column:
-    """v / |v|; identity for the zero vector (reference `embedding.ts:131-141`)."""
-    a = F.col(a) if isinstance(a, str) else a
-    n = l2_norm(a)
-    return F.when(n == F.lit(0.0), a.cast("array<double>")).otherwise(
-        F.transform(a, lambda x: x.cast("double") / n)
+def cosine(a: str, b: str) -> Column:
+    """Cosine similarity of two named array columns, with the reference's
+    zero-vector guard (→ 0.0). Each norm is folded where it is read, twice
+    per row; scoring against one literal query vector goes through
+    ``operators.search.with_score`` instead."""
+    a, b = quote(a), quote(b)
+    na, nb = f"sqrt({dot_sql(a, a)})", f"sqrt({dot_sql(b, b)})"
+    return F.expr(
+        f"CASE WHEN {na} = 0D OR {nb} = 0D THEN 0D "
+        f"ELSE {dot_sql(a, b)} / ({na} * {nb}) END"
     )
 
 

@@ -281,7 +281,7 @@ class MCPServer:
                 goal = state.get("goal") or goal
 
         qv = embed_text(query, self.eng.dim)
-        scored = S.with_score(self.eng.chunks(), qv, S.seq_norm(qv))
+        scored = S.with_score(self.eng.chunks(), qv)
         excludes = ctx.get("excludeResults") or []
         if excludes:
             scored = S.exclude_ids(scored, excludes, id_col="id")

@@ -23,9 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gistdex_spark.functions.vectors import cosine
-
-ROUND = 6
+from gistdex_spark.functions.vectors import dot_sql, l2_norm, quote
+from gistdex_spark.operators.search import with_score
 
 
 def train_centroids(
@@ -45,7 +44,7 @@ def train_centroids(
     its coarse quantizer on a sample too): one count + ONE distributed
     scan collects a deterministic-seed RAW sample capped at
     ``train_sample`` rows (normalized driver-side in numpy,
-    bit-identically — the Catalyst ``normalize()`` projection inlines
+    bit-identically — a Catalyst normalize projection inlines
     the norm fold per output element and made the collect itself the
     hot spot; see pq._collect_normalized_sample), then a seeded
     in-memory k-means++ fit — centroid quality saturates at ~1k-10k
@@ -143,32 +142,25 @@ def assign_clusters(
         centroids = emb.sparkSession.createDataFrame(
             rows, schema=narrow_cents.schema
         )
-    from gistdex_spark.functions.vectors import dot, l2_norm
-
     cents_arr = centroids.select(
-        F.struct(
-            F.col("c_id"), F.col("c_vec"), l2_norm(F.col("c_vec")).alias("c_nrm")
-        ).alias("c")
+        F.struct(F.col("c_id"), F.col("c_vec"), l2_norm("c_vec").alias("c_nrm")).alias("c")
     ).agg(F.array_sort(F.collect_list("c")).alias("cents"))
-    init = F.struct(
-        F.lit(-2.0).cast("double").alias("s"), F.lit(-1).cast("bigint").alias("cid")
+    # Strictly-greater argmax over the c_id-sorted centroids: ties keep
+    # the lowest c_id. The score is the cosine over the precomputed norms.
+    s = (
+        "CASE WHEN __ne = 0D OR c.c_nrm = 0D THEN 0D "
+        f"ELSE {dot_sql(quote(embedding_col), 'c.c_vec')} / (__ne * c.c_nrm) END"
     )
-
-    def _merge(acc, c):
-        s = F.when(
-            (F.col("__ne") == F.lit(0.0)) | (c["c_nrm"] == F.lit(0.0)), F.lit(0.0)
-        ).otherwise(
-            dot(F.col(embedding_col), c["c_vec"]) / (F.col("__ne") * c["c_nrm"])
-        )
-        return F.when(
-            s > acc["s"],
-            F.struct(s.alias("s"), c["c_id"].cast("bigint").alias("cid")),
-        ).otherwise(acc)
-
+    best = F.expr(
+        "aggregate(cents, named_struct('s', -2D, 'cid', -1L), (best, c) -> "
+        f"CASE WHEN {s} > best.s "
+        f"THEN named_struct('s', {s}, 'cid', CAST(c.c_id AS BIGINT)) "
+        "ELSE best END)"
+    )
     return (
-        emb.withColumn("__ne", l2_norm(F.col(embedding_col)))
+        emb.withColumn("__ne", l2_norm(embedding_col))
         .crossJoin(F.broadcast(cents_arr))
-        .withColumn("best", F.aggregate("cents", init, _merge))
+        .withColumn("best", best)
         .select(id_col, embedding_col, F.col("best.cid").alias("cluster"))
     )
 
@@ -265,16 +257,15 @@ def probe(
     is an equality join on ``cluster`` (partition pruning when the store
     is partitioned by it). Result: (id, score) ordered desc.
     """
-    qlit = F.lit([float(x) for x in query_vec])
     qcells = (
-        centroids.withColumn("qs", cosine("c_vec", qlit))
-        .orderBy(F.desc("qs"), F.asc("c_id"))
+        with_score(centroids, query_vec, "c_vec")
+        .orderBy(F.desc("score"), F.asc("c_id"))
         .limit(nprobe)
         .select(F.col("c_id").alias("cluster"))
     )
     probed = assigned.join(F.broadcast(qcells), "cluster")
     return (
-        probed.withColumn("score", F.round(cosine(embedding_col, qlit), ROUND))
+        with_score(probed, query_vec, embedding_col)
         .select(id_col, "score")
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)

@@ -29,9 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gistdex_spark.functions.vectors import cosine
-
-ROUND = 6
+from gistdex_spark.functions.vectors import vector_literal
+from gistdex_spark.operators.search import with_score
 
 
 def _kmeans_np(X, k: int, seed: int, max_iter: int):
@@ -80,10 +79,10 @@ def _collect_normalized_sample(
     """ONE count + ONE collect of RAW vectors, normalized driver-side in
     numpy: the float64 widen, the dimension-ORDERED squared-norm fold,
     the zero-norm identity guard, and the per-element division are the
-    exact IEEE sequence of the Catalyst ``normalize()`` expression, so
-    every trained artifact is bit-identical to the previous
+    exact IEEE sequence of the Catalyst ``transform(v, x -> x / |v|)``
+    expression, so every trained artifact is bit-identical to the previous
     collect-through-normalize form. That form was the hidden hot spot:
-    ``normalize()`` inlines the norm fold into EVERY element of its
+    the transform inlines the norm fold into EVERY element of its
     output transform (Catalyst substitutes, it does not CSE lambda-bound
     subtrees), so each collected row paid ~dim² interpreted steps —
     measured 1.9-4.1 s for a 2,000-row collect at sf0.1, pure expression
@@ -108,7 +107,7 @@ def _collect_normalized_sample(
     for j in range(X.shape[1]):
         ss = ss + X[:, j] * X[:, j]
     nrm = np.sqrt(ss)[:, None]
-    nrm[nrm == 0.0] = 1.0  # zero vector stays itself (normalize()'s guard)
+    nrm[nrm == 0.0] = 1.0  # zero vector stays itself
     return X / nrm
 
 
@@ -322,11 +321,13 @@ def adc_score_col(
     codebooks: list[list[list[float]]], query_vec: list[float]
 ) -> F.Column:
     """Approximate inner-product of the query against a ``codes`` column:
-    m array lookups + adds per row against the literal ADC table."""
+    m array lookups + adds per row against the literal ADC table, shipped
+    row-major as one flat array literal."""
     table = adc_table(codebooks, query_vec)
-    tlit = F.lit([[float(x) for x in row] for row in table])
+    ksub = len(table[0])
+    tlit = vector_literal([x for row in table for x in row])
     return sum(
-        (F.element_at(F.element_at(tlit, s + 1), F.col("codes")[s] + 1))
+        (F.element_at(tlit, F.col("codes")[s] + (s * ksub + 1)))
         for s in range(len(codebooks))
     )
 
@@ -352,9 +353,8 @@ def pq_search(
         .orderBy(F.desc("approx"), F.asc(id_col))
         .limit(shortlist)
     )
-    qlit = F.lit([float(x) for x in query_vec])
-    exact = emb.join(F.broadcast(short), id_col).withColumn(
-        "score", F.round(cosine(embedding_col, qlit), ROUND)
+    exact = with_score(
+        emb.join(F.broadcast(short), id_col), query_vec, embedding_col
     )
     return (
         exact.select(id_col, "score")
@@ -440,14 +440,11 @@ def ivfpq_search(
     exact math happens on ``shortlist`` rows. Pass a persisted ``index``
     (from :func:`ivfpq_index`, ideally written partitioned by cluster)
     to skip the in-line index build — the production path."""
-    from gistdex_spark.functions.vectors import cosine
-
     if index is None:
         index = ivfpq_index(emb, centroids, codebooks, id_col, embedding_col)
-    qlit = F.lit([float(x) for x in query_vec])
     qcells = (
-        centroids.withColumn("qs", cosine("c_vec", qlit))
-        .orderBy(F.desc("qs"), F.asc("c_id"))
+        with_score(centroids, query_vec, "c_vec")
+        .orderBy(F.desc("score"), F.asc("c_id"))
         .limit(nprobe)
         .select(F.col("c_id").alias("cluster"))
     )
@@ -458,8 +455,8 @@ def ivfpq_search(
         .orderBy(F.desc("approx"), F.asc(id_col))
         .limit(shortlist)
     )
-    exact = emb.join(F.broadcast(short), id_col).withColumn(
-        "score", F.round(cosine(embedding_col, qlit), ROUND)
+    exact = with_score(
+        emb.join(F.broadcast(short), id_col), query_vec, embedding_col
     )
     return (
         exact.select(id_col, "score")

@@ -10,11 +10,13 @@ Maps SURVEY.md §2 J3/W1/W2/W3/W6/F7/F8. Reference behavior:
 - pagination (W6): over-fetch k = page_size*3, slice by offset
   (`agent-query-tool.ts:900-941`).
 
-Scale notes: the query vector is a literal (broadcast by value); scoring is
-a narrow map over the scan (no shuffle); top-k compiles to
-TakeOrderedAndProject (per-partition heap + driver merge of k rows — no full
-sort even at 100 TB). Batched kNN broadcasts the query set and takes top-k
-per query with one window shuffle partitioned by query id.
+Scale notes: ``with_score(df, qv)`` is the one scoring stage for a literal
+query vector (kNN here, the ANN reranks and centroid probes elsewhere): the
+vector ships as one array literal (broadcast by value), scoring is a narrow
+map over the scan (no shuffle), and top-k compiles to TakeOrderedAndProject
+(per-partition heap + driver merge of k rows — no full sort even at
+100 TB). Batched kNN broadcasts the query set and takes top-k per query
+with one window shuffle partitioned by query id.
 
 Scores are rounded to 6 dp *before* ordering with an id tiebreak, so result
 sets are deterministic and engine-independent (the DuckDB oracle sorts the
@@ -23,87 +25,62 @@ same way).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+import math
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from gistdex_spark.functions.text import match_count, query_words, tokens
-from gistdex_spark.functions.vectors import cosine, spark_dot_sql, vector_literal
+from gistdex_spark.functions.vectors import cosine, dot_sql, quote, vector_literal
 
 ROUND = 6
 
 
 def seq_norm(vec: list[float]) -> float:
     """Query-vector norm for :func:`with_score`: a sequential left-fold sum
-    of squares, the accumulation order of the engines' row norm."""
+    of squares, the accumulation order of the engines' row norm, and a
+    correctly rounded square root like theirs (``s**0.5`` is not)."""
     s = 0.0
     for v in vec:
         s += v * v
-    return s**0.5
+    return math.sqrt(s)
 
 
 def with_score(
     df: DataFrame,
     qv: list[float],
-    qn: float,
     vec_col: str = "embedding",
     score_col: str = "score",
 ) -> DataFrame:
-    """Attach ``round(cosine(vec_col, qv), 6)``, with ``qn`` the norm of
-    ``qv`` computed by the caller. A zero row vector scores 0.0; a null
-    embedding, a null element or a length mismatch scores null.
+    """Attach ``round(cosine(vec_col, qv), 6)``: the one way this package
+    scores rows against a literal query vector. A zero row vector scores
+    0.0; a null embedding, a null element or a length mismatch scores
+    null. A zero query vector scores every row 0.0, as :func:`cosine`
+    does.
 
-    Plan shape: ``qv`` is one array literal and ``qn`` a double literal, so
-    scoring adds no Spark job and no join. The row norm gets its own
-    projection: it is read twice (zero guard and denominator), and
-    CollapseProject does not inline a non-cheap expression used twice, so
-    it is evaluated once per row. Each expression is parsed from SQL text
-    in one JVM call (:func:`spark_dot_sql`).
+    Plan shape: ``qv`` is one array literal and its norm a double literal
+    (:func:`seq_norm`), so scoring adds no Spark job and no join. The row
+    norm is read twice (zero guard and denominator) but folded once: the
+    score binds it as the one element of a ``transform``. So scoring is a
+    single projection, which CollapseProject merges with the literal's,
+    and a top-k heap below it stays a TakeOrderedAndProject that scores
+    only the rows it keeps. Each expression is parsed from SQL text in one
+    JVM call (:func:`dot_sql`).
     """
-    q, ne = "__q_vec", "__row_norm"
+    qn = seq_norm(qv)
+    if qn == 0.0:
+        return df.withColumn(score_col, F.lit(0.0))
+    q, v = "__q_vec", quote(vec_col)
     score = (
-        f"round(CASE WHEN {ne} = 0D THEN 0D "
-        f"ELSE {spark_dot_sql(vec_col, q)} / ({ne} * {float(qn)!r}D) END, {ROUND})"
+        f"round(transform(array(sqrt({dot_sql(v, v)})), ne -> "
+        f"CASE WHEN ne = 0D THEN 0D "
+        f"ELSE {dot_sql(v, q)} / (ne * {qn!r}D) END)[0], {ROUND})"
     )
     return (
-        df.select(
-            "*",
-            vector_literal(qv).alias(q),
-            F.expr(f"sqrt({spark_dot_sql(vec_col, vec_col)})").alias(ne),
-        )
+        df.select("*", vector_literal(qv).alias(q))
         .withColumn(score_col, F.expr(score))
-        .drop(q, ne)
+        .drop(q)
     )
-
-
-def score_against(
-    df: DataFrame,
-    query_vec: list[float],
-    vec_col: str = "embedding",
-    score_col: str = "score",
-) -> DataFrame:
-    """Attach a rounded cosine score against a literal query vector."""
-    return df.withColumn(
-        score_col, F.round(cosine(F.col(vec_col), vector_literal(query_vec)), ROUND)
-    )
-
-
-def top_k(df: DataFrame, k: int, id_col: str = "vec_id", score_col: str = "score") -> DataFrame:
-    """ORDER BY score DESC, id ASC LIMIT k — TakeOrderedAndProject."""
-    return df.orderBy(F.desc(score_col), F.asc(id_col)).limit(k)
-
-
-def knn(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    where: Column | None = None,
-) -> DataFrame:
-    """J3: brute-force exact kNN. Filter first so the scan prunes."""
-    if where is not None:
-        df = df.filter(where)
-    return top_k(score_against(df, query_vec, vec_col), k, id_col)
 
 
 def knn_batch(
@@ -121,7 +98,7 @@ def knn_batch(
     partition-local until the rank shuffle, and AQE handles skew.
     """
     scored = corpus.crossJoin(F.broadcast(queries)).withColumn(
-        "score", F.round(cosine(F.col(vec_col), F.col(query_vec_col)), ROUND)
+        "score", F.round(cosine(vec_col, query_vec_col), ROUND)
     )
     w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
     return (
@@ -351,10 +328,6 @@ def mmr_select(
     identical function of the same double in Python, Spark, and DuckDB
     (see q2_cheapest_supplier) — ties broken by id ascending.
     """
-    import math as _m
-
-    from gistdex_spark.functions.vectors import cosine
-
     spark = candidates.sparkSession
     # a NULL embedding cannot be diversified against (cosine -> NULL sims
     # would poison the greedy max); drop such candidates up front
@@ -373,7 +346,7 @@ def mmr_select(
         .select(
             "__i",
             "__j",
-            F.round(cosine(F.col("__va"), F.col("__vb")), ROUND).alias("__s"),
+            F.round(cosine("__va", "__vb"), ROUND).alias("__s"),
         )
     )
     rel = {r["__i"]: r["__rel"] for r in a.select("__i", "__rel").collect()}
@@ -388,7 +361,7 @@ def mmr_select(
         for d in remaining:  # id-ascending scan => asc tiebreak for free
             max_s = max((sim[(d, s)] for s in chosen), default=0.0)
             raw = lam * rel[d] - (1.0 - lam) * max_s
-            m = _m.floor(raw * 1_000_000) / 1_000_000
+            m = math.floor(raw * 1_000_000) / 1_000_000
             if best is None or m > best[1]:
                 best = (d, m)
         selected.append((len(selected) + 1, best[0], best[1]))

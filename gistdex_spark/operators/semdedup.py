@@ -115,14 +115,14 @@ def semdedup(
     cents = centroids.select(
         F.col("c_id").alias("cluster"),
         F.col("c_vec").alias("c__vec"),
-        l2_norm(F.col("c_vec")).alias("c__nrm"),
+        l2_norm("c_vec").alias("c__nrm"),
     )
     # cos-to-centroid AND the row's own norm once per row (the norm is
     # reused by every pair the row appears in — 1 dot per pair instead of
     # 3; bit-identical to recomputing, it is the same expression tree);
     # centroid set is tiny -> broadcast.
     base = (
-        assigned.withColumn("nrm", l2_norm(F.col(embedding_col)))
+        assigned.withColumn("nrm", l2_norm(embedding_col))
         .join(F.broadcast(cents), "cluster")
         .withColumn(
             "cos_centroid",
@@ -131,7 +131,7 @@ def semdedup(
                     (F.col("nrm") == F.lit(0.0)) | (F.col("c__nrm") == F.lit(0.0)),
                     F.lit(0.0),
                 ).otherwise(
-                    dot(F.col(embedding_col), F.col("c__vec"))
+                    dot(embedding_col, "c__vec")
                     / (F.col("nrm") * F.col("c__nrm"))
                 ),
                 ROUND,

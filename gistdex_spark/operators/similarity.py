@@ -13,10 +13,12 @@ Scale design:
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from gistdex_spark.functions.vectors import cosine, vector_literal
+from gistdex_spark.functions.vectors import cosine
+from gistdex_spark.operators.search import with_score
 
 ROUND = 6
 
@@ -52,9 +54,7 @@ def ann_lsh(
     """
     qb = sign_bucket_py(query_vec, nbits)
     pruned = emb.filter(sign_bucket(vec_col, nbits) == F.lit(qb))
-    scored = pruned.withColumn(
-        "score", F.round(cosine(F.col(vec_col), vector_literal(query_vec)), ROUND)
-    )
+    scored = with_score(pruned, query_vec, vec_col)
     return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
 
 
@@ -96,9 +96,7 @@ def ann_lsh_multiprobe(
     """
     probes = probe_buckets(query_vec, nbits, radius)
     pruned = emb.filter(sign_bucket(vec_col, nbits).isin(probes))
-    scored = pruned.withColumn(
-        "score", F.round(cosine(F.col(vec_col), vector_literal(query_vec)), ROUND)
-    )
+    scored = with_score(pruned, query_vec, vec_col)
     return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
 
 
@@ -144,9 +142,7 @@ def ann_lsh_multitable(
         probes = probe_buckets(query_vec, nbits, radius, offset=t * nbits)
         c = sign_bucket(vec_col, nbits, offset=t * nbits).isin(probes)
         cond = c if cond is None else (cond | c)
-    scored = emb.filter(cond).withColumn(
-        "score", F.round(cosine(F.col(vec_col), vector_literal(query_vec)), ROUND)
-    )
+    scored = with_score(emb.filter(cond), query_vec, vec_col)
     return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
 
 
@@ -246,11 +242,9 @@ def ann_lsh_vote(
         .orderBy(F.desc("__votes"), F.asc(id_col))
         .limit(shortlist)
     )
-    scored = short.withColumn(
-        "score", F.round(cosine(F.col(vec_col), vector_literal(query_vec)), ROUND)
-    )
     return (
-        scored.select(id_col, "score")
+        with_score(short, query_vec, vec_col)
+        .select(id_col, "score")
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)
     )
@@ -273,7 +267,7 @@ def similarity_join(
     corpus side streams, and per-query top-k is a single window shuffle.
     """
     scored = corpus.crossJoin(F.broadcast(queries)).withColumn(
-        "sim", F.round(cosine(F.col(corpus_vec), F.col(query_vec)), ROUND)
+        "sim", F.round(cosine(corpus_vec, query_vec), ROUND)
     )
     out = scored.filter(F.col("sim") >= F.lit(threshold))
     if k_per_query is not None:
@@ -328,7 +322,7 @@ def binary_signature(
     overflow). Zero-shuffle fold per half."""
 
     def half(offset: int, bits: int):
-        powers = F.lit([1 << i for i in range(bits)])
+        powers = F.lit(np.array([1 << i for i in range(bits)], dtype=np.int64))
         return F.aggregate(
             F.zip_with(
                 F.slice(vec_col, offset + 1, bits),
@@ -376,10 +370,7 @@ def ann_binary_sign(
         .limit(shortlist)
     )
     return (
-        short.withColumn(
-            "score",
-            F.round(cosine(F.col(vec_col), vector_literal(query_vec)), ROUND),
-        )
+        with_score(short, query_vec, vec_col)
         .select(id_col, "score")
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)
@@ -566,10 +557,7 @@ def ann_int8(
         .limit(shortlist)
     )
     return (
-        short.withColumn(
-            "score",
-            F.round(cosine(F.col(vec_col), vector_literal(query_vec)), ROUND),
-        )
+        with_score(short, query_vec, vec_col)
         .select(id_col, "score")
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)

@@ -37,6 +37,10 @@ def executed_plan(df: DataFrame) -> str:
         spark.conf.set(key, old)
 
 
+def analyzed_plan(df: DataFrame) -> str:
+    return df._jdf.queryExecution().analyzed().toString()
+
+
 def optimized_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 

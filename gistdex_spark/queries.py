@@ -336,7 +336,7 @@ def order_priority_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def knn_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    scored = with_score(emb, QV_MAIN, QN_MAIN)
+    scored = with_score(emb, QV_MAIN)
     return scored.select("vec_id", "label", "score").orderBy(
         F.desc("score"), F.asc("vec_id")
     ).limit(10)
@@ -376,12 +376,12 @@ def knn_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(i, BATCH_VECS[i], BATCH_NORMS[i]) for i in range(len(BATCH_VECS))],
         schema="query_id INT, qv ARRAY<DOUBLE>, qn DOUBLE",
     )
-    ne = V.l2_norm(F.col("embedding"))
+    ne = V.l2_norm("embedding")
     scored = emb.crossJoin(F.broadcast(queries)).withColumn(
         "score",
         F.round(
             F.when(ne == F.lit(0.0), F.lit(0.0)).otherwise(
-                V.dot(F.col("embedding"), F.col("qv")) / (ne * F.col("qn"))
+                V.dot("embedding", "qv") / (ne * F.col("qn"))
             ),
             ROUND,
         ),
@@ -417,7 +417,7 @@ _SEM_TOP10_SQL = f"""
 def semantic_search_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic top-k then rerank boost (reference `search.ts:21-91`)."""
     corpus = _corpus(spark, sf_dir)
-    scored = with_score(corpus, QV_DOC, QN_DOC)
+    scored = with_score(corpus, QV_DOC)
     top10 = scored.select("doc_id", "text", "score").orderBy(
         F.desc("score"), F.asc("doc_id")
     ).limit(10)
@@ -440,7 +440,7 @@ def semantic_search_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid = re-score of the semantic candidate set (`search.ts:98-136`)."""
     corpus = _corpus(spark, sf_dir)
-    scored = with_score(corpus, QV_DOC, QN_DOC)
+    scored = with_score(corpus, QV_DOC)
     top10 = scored.select("doc_id", "text", "score").orderBy(
         F.desc("score"), F.asc("doc_id")
     ).limit(10)
@@ -461,7 +461,7 @@ def hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 def search_lang_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F4 analogue: attribute shorthand filter applied BEFORE the kNN."""
     corpus = _corpus(spark, sf_dir).filter(F.col("lang") == "en")
-    scored = with_score(corpus, QV_DOC, QN_DOC)
+    scored = with_score(corpus, QV_DOC)
     return scored.select("doc_id", "lang", "score").orderBy(
         F.desc("score"), F.asc("doc_id")
     ).limit(10)
@@ -478,7 +478,7 @@ def search_lang_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def threshold_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    scored = with_score(emb, QV_MAIN, QN_MAIN)
+    scored = with_score(emb, QV_MAIN)
     return S.threshold(scored, 0.05).select("vec_id", "score")
 
 
@@ -495,7 +495,7 @@ def threshold_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def exclude_ids_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     emb = S.exclude_ids(emb, [3, 7, 11])
-    scored = with_score(emb, QV_MAIN, QN_MAIN)
+    scored = with_score(emb, QV_MAIN)
     return scored.select("vec_id", "score").orderBy(
         F.desc("score"), F.asc("vec_id")
     ).limit(10)
@@ -520,7 +520,7 @@ def exclude_ids_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pagination_page2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W6: over-fetch k = page_size*3, then slice page 2 (rows 11-20)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    scored = with_score(emb, QV_MAIN, QN_MAIN)
+    scored = with_score(emb, QV_MAIN)
     fetched = scored.select("vec_id", "score").orderBy(
         F.desc("score"), F.asc("vec_id")
     ).limit(30)
@@ -539,7 +539,7 @@ _ALL_SCORES_SQL = f"""
 
 def _all_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return with_score(emb, QV_MAIN, QN_MAIN).select("vec_id", "score")
+    return with_score(emb, QV_MAIN).select("vec_id", "score")
 
 
 @register(
@@ -1376,13 +1376,7 @@ def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT id_a, id_b, sim FROM (
       SELECT l.vec_id AS id_a, r.vec_id AS id_b,
-             round(CASE WHEN sqrt({V.sql_dot('l.embedding', 'l.embedding')}) = 0
-                        OR sqrt({V.sql_dot('r.embedding', 'r.embedding')}) = 0
-                   THEN 0.0
-                   ELSE {V.sql_dot('l.embedding', 'r.embedding')}
-                        / (sqrt({V.sql_dot('l.embedding', 'l.embedding')})
-                           * sqrt({V.sql_dot('r.embedding', 'r.embedding')}))
-                   END, {ROUND}) AS sim
+             round({V.sql_cosine('l.embedding', 'r.embedding')}, {ROUND}) AS sim
       FROM embeddings l JOIN embeddings r ON l.vec_id < r.vec_id)
     WHERE sim >= 0.35
     """,
@@ -1410,13 +1404,7 @@ _KNN_GRAPH_SQL = f"""
                                   ORDER BY sim DESC, nbr_id ASC) AS rk
         FROM (
           SELECT l.vec_id AS src_id, r.vec_id AS nbr_id,
-                 round(CASE WHEN sqrt({V.sql_dot('l.embedding', 'l.embedding')}) = 0
-                            OR sqrt({V.sql_dot('r.embedding', 'r.embedding')}) = 0
-                       THEN 0.0
-                       ELSE {V.sql_dot('l.embedding', 'r.embedding')}
-                            / (sqrt({V.sql_dot('l.embedding', 'l.embedding')})
-                               * sqrt({V.sql_dot('r.embedding', 'r.embedding')}))
-                       END, {ROUND}) AS sim
+                 round({V.sql_cosine('l.embedding', 'r.embedding')}, {ROUND}) AS sim
           FROM embeddings l JOIN embeddings r ON l.vec_id <> r.vec_id))
       WHERE rk <= {_KNN_GRAPH_K}
 """
@@ -1459,13 +1447,7 @@ def _sql_bucket(vec_col: str, nbits: int, offset: int = 0) -> str:
                                 ORDER BY sim DESC, nbr_id ASC) AS rk
       FROM (
         SELECT l.vec_id AS src_id, r.vec_id AS nbr_id,
-               round(CASE WHEN sqrt({V.sql_dot('l.embedding', 'l.embedding')}) = 0
-                          OR sqrt({V.sql_dot('r.embedding', 'r.embedding')}) = 0
-                     THEN 0.0
-                     ELSE {V.sql_dot('l.embedding', 'r.embedding')}
-                          / (sqrt({V.sql_dot('l.embedding', 'l.embedding')})
-                             * sqrt({V.sql_dot('r.embedding', 'r.embedding')}))
-                     END, {ROUND}) AS sim
+               round({V.sql_cosine('l.embedding', 'r.embedding')}, {ROUND}) AS sim
         FROM embeddings l JOIN embeddings r
           ON l.vec_id <> r.vec_id
          AND {{lb}} = {{rb}}))
@@ -1505,13 +1487,7 @@ _KNN_MT_MATCH_SQL = " OR ".join(
                                 ORDER BY sim DESC, nbr_id ASC) AS rk
       FROM (
         SELECT l.vec_id AS src_id, r.vec_id AS nbr_id,
-               round(CASE WHEN sqrt({V.sql_dot('l.embedding', 'l.embedding')}) = 0
-                          OR sqrt({V.sql_dot('r.embedding', 'r.embedding')}) = 0
-                     THEN 0.0
-                     ELSE {V.sql_dot('l.embedding', 'r.embedding')}
-                          / (sqrt({V.sql_dot('l.embedding', 'l.embedding')})
-                             * sqrt({V.sql_dot('r.embedding', 'r.embedding')}))
-                     END, {ROUND}) AS sim
+               round({V.sql_cosine('l.embedding', 'r.embedding')}, {ROUND}) AS sim
         FROM embeddings l JOIN embeddings r
           ON l.vec_id <> r.vec_id AND ({_KNN_MT_MATCH_SQL})))
     WHERE rk <= {_KNN_GRAPH_K}
@@ -1621,13 +1597,7 @@ def _funnel_oracle(knn_extra: str = "") -> str:
                                   ORDER BY sim DESC, nbr_id ASC) AS rk
         FROM (
           SELECT l.doc_id AS src_id, r.doc_id AS nbr_id,
-                 round(CASE WHEN sqrt({V.sql_dot('l.embedding', 'l.embedding')}) = 0
-                            OR sqrt({V.sql_dot('r.embedding', 'r.embedding')}) = 0
-                       THEN 0.0
-                       ELSE {V.sql_dot('l.embedding', 'r.embedding')}
-                            / (sqrt({V.sql_dot('l.embedding', 'l.embedding')})
-                               * sqrt({V.sql_dot('r.embedding', 'r.embedding')}))
-                       END, {ROUND}) AS sim
+                 round({V.sql_cosine('l.embedding', 'r.embedding')}, {ROUND}) AS sim
           FROM gates l JOIN gates r ON l.doc_id <> r.doc_id{knn_extra}))
       WHERE rk <= 5),
     {_FUNNEL_ORACLE_TAIL}
@@ -2447,21 +2417,9 @@ _HN_LO, _HN_HI, _HN_K = 0.35, 0.9, 3
       FROM (
         SELECT src_id, nbr_id, sim FROM (
           SELECT l.vec_id AS src_id, r.vec_id AS nbr_id,
-                 round(CASE WHEN sqrt({V.sql_dot('l.embedding', 'l.embedding')}) = 0
-                            OR sqrt({V.sql_dot('r.embedding', 'r.embedding')}) = 0
-                       THEN 0.0
-                       ELSE {V.sql_dot('l.embedding', 'r.embedding')}
-                            / (sqrt({V.sql_dot('l.embedding', 'l.embedding')})
-                               * sqrt({V.sql_dot('r.embedding', 'r.embedding')}))
-                       END, {ROUND}) AS sim,
+                 round({V.sql_cosine('l.embedding', 'r.embedding')}, {ROUND}) AS sim,
                  row_number() OVER (PARTITION BY l.vec_id
-                                    ORDER BY round(CASE WHEN sqrt({V.sql_dot('l.embedding', 'l.embedding')}) = 0
-                            OR sqrt({V.sql_dot('r.embedding', 'r.embedding')}) = 0
-                       THEN 0.0
-                       ELSE {V.sql_dot('l.embedding', 'r.embedding')}
-                            / (sqrt({V.sql_dot('l.embedding', 'l.embedding')})
-                               * sqrt({V.sql_dot('r.embedding', 'r.embedding')}))
-                       END, {ROUND}) DESC, r.vec_id ASC) AS rk
+                                    ORDER BY round({V.sql_cosine('l.embedding', 'r.embedding')}, {ROUND}) DESC, r.vec_id ASC) AS rk
           FROM embeddings l JOIN embeddings r ON l.vec_id <> r.vec_id)
         WHERE rk <= {_HN_POOL_K}
           AND sim >= {_HN_LO} AND sim < {_HN_HI}))
@@ -2506,21 +2464,9 @@ def _hn_band_rerank(g: DataFrame) -> DataFrame:
       FROM (
         SELECT src_id, nbr_id, sim FROM (
           SELECT l.vec_id AS src_id, r.vec_id AS nbr_id,
-                 round(CASE WHEN sqrt({V.sql_dot('l.embedding', 'l.embedding')}) = 0
-                            OR sqrt({V.sql_dot('r.embedding', 'r.embedding')}) = 0
-                       THEN 0.0
-                       ELSE {V.sql_dot('l.embedding', 'r.embedding')}
-                            / (sqrt({V.sql_dot('l.embedding', 'l.embedding')})
-                               * sqrt({V.sql_dot('r.embedding', 'r.embedding')}))
-                       END, {ROUND}) AS sim,
+                 round({V.sql_cosine('l.embedding', 'r.embedding')}, {ROUND}) AS sim,
                  row_number() OVER (PARTITION BY l.vec_id
-                                    ORDER BY round(CASE WHEN sqrt({V.sql_dot('l.embedding', 'l.embedding')}) = 0
-                            OR sqrt({V.sql_dot('r.embedding', 'r.embedding')}) = 0
-                       THEN 0.0
-                       ELSE {V.sql_dot('l.embedding', 'r.embedding')}
-                            / (sqrt({V.sql_dot('l.embedding', 'l.embedding')})
-                               * sqrt({V.sql_dot('r.embedding', 'r.embedding')}))
-                       END, {ROUND}) DESC, r.vec_id ASC) AS rk
+                                    ORDER BY round({V.sql_cosine('l.embedding', 'r.embedding')}, {ROUND}) DESC, r.vec_id ASC) AS rk
           FROM embeddings l JOIN embeddings r
             ON l.vec_id <> r.vec_id AND ({_KNN_MT_MATCH_SQL}))
         WHERE rk <= {_HN_POOL_K}
@@ -2735,13 +2681,7 @@ _BLK_NBITS = 4
     oracle=f"""
     SELECT id_a, id_b, sim FROM (
       SELECT l.vec_id AS id_a, r.vec_id AS id_b,
-             round(CASE WHEN sqrt({V.sql_dot('l.embedding', 'l.embedding')}) = 0
-                        OR sqrt({V.sql_dot('r.embedding', 'r.embedding')}) = 0
-                   THEN 0.0
-                   ELSE {V.sql_dot('l.embedding', 'r.embedding')}
-                        / (sqrt({V.sql_dot('l.embedding', 'l.embedding')})
-                           * sqrt({V.sql_dot('r.embedding', 'r.embedding')}))
-                   END, {ROUND}) AS sim
+             round({V.sql_cosine('l.embedding', 'r.embedding')}, {ROUND}) AS sim
       FROM embeddings l JOIN embeddings r
         ON l.vec_id < r.vec_id
        AND {_sql_bucket('l.embedding', _BLK_NBITS)}
@@ -3038,7 +2978,7 @@ def query_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     stages = []
     for i, k in enumerate(_CHAIN_KS):
-        scored = with_score(embs, BATCH_VECS[i], BATCH_NORMS[i])
+        scored = with_score(embs, BATCH_VECS[i])
         top = scored.select("doc_id", "score").orderBy(
             F.desc("score"), F.asc("doc_id")
         ).limit(k)
@@ -3234,7 +3174,7 @@ def redundancy_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantic top-10 result set."""
     corpus = _corpus(spark, sf_dir)
     top10 = (
-        with_score(corpus, QV_DOC, QN_DOC)
+        with_score(corpus, QV_DOC)
         .select("doc_id", "text", "score")
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(10)
@@ -3396,11 +3336,7 @@ _IVF_ASSIGN_SQL = f"""
         SELECT e.vec_id, e.embedding, c.vec_id AS cluster,
                row_number() OVER (
                  PARTITION BY e.vec_id
-                 ORDER BY (CASE WHEN sqrt({V.sql_dot('e.embedding', 'e.embedding')}) = 0
-                        OR sqrt({V.sql_dot('c.embedding', 'c.embedding')}) = 0 THEN 0.0
-                       ELSE {V.sql_dot('e.embedding', 'c.embedding')}
-                            / (sqrt({V.sql_dot('e.embedding', 'e.embedding')})
-                               * sqrt({V.sql_dot('c.embedding', 'c.embedding')})) END) DESC,
+                 ORDER BY {V.sql_cosine('e.embedding', 'c.embedding')} DESC,
                        c.vec_id ASC) AS rn
         FROM embeddings e
         CROSS JOIN (SELECT * FROM embeddings WHERE vec_id < {_IVF_C}) c)
@@ -3445,16 +3381,13 @@ def ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, cents, partitions=spark.sparkContext.defaultParallelism
     )
     qcluster = (
-        with_score(
-            cents.select(F.col("c_id").alias("vec_id"), F.col("c_vec").alias("embedding")),
-            QV_MAIN, QN_MAIN,
-        )
-        .orderBy(F.desc("score"), F.asc("vec_id"))
+        with_score(cents, QV_MAIN, "c_vec")
+        .orderBy(F.desc("score"), F.asc("c_id"))
         .limit(1)
-        .select(F.col("vec_id").alias("qc"))
+        .select(F.col("c_id").alias("qc"))
     )
     probed = assigned.join(F.broadcast(qcluster), assigned.cluster == qcluster.qc)
-    scored = with_score(probed, QV_MAIN, QN_MAIN)
+    scored = with_score(probed, QV_MAIN)
     return scored.select("vec_id", "score").orderBy(
         F.desc("score"), F.asc("vec_id")
     ).limit(5)
@@ -3751,7 +3684,7 @@ def search_hints(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the top-k, then a CASE cascade."""
     emb = load_table(spark, sf_dir, "embeddings")
     top = (
-        with_score(emb, QV_MAIN, QN_MAIN)
+        with_score(emb, QV_MAIN)
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(10)
     )
@@ -6461,13 +6394,7 @@ def bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
          tr AS (SELECT vec_id, embedding FROM embeddings WHERE label <> 0),
     sims AS (
       SELECT tr.vec_id,
-             max(CASE WHEN sqrt({V.sql_dot('tr.embedding', 'tr.embedding')}) = 0
-                      OR sqrt({V.sql_dot('e.embedding', 'e.embedding')}) = 0
-                 THEN 0.0
-                 ELSE {V.sql_dot('tr.embedding', 'e.embedding')}
-                      / (sqrt({V.sql_dot('tr.embedding', 'tr.embedding')})
-                         * sqrt({V.sql_dot('e.embedding', 'e.embedding')}))
-                 END) AS ms
+             max({V.sql_cosine('tr.embedding', 'e.embedding')}) AS ms
       FROM tr CROSS JOIN e GROUP BY tr.vec_id)
     SELECT vec_id, round(ms, 6) AS max_eval_cosine,
            ms >= 0.35 AS contaminated
@@ -6833,7 +6760,6 @@ def user_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ==========================================================================
 
 _QV16 = QV_MAIN[:16]
-_QN16 = seq_norm(_QV16)
 
 
 @register(
@@ -6860,14 +6786,14 @@ def matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject over narrow scans; the overlap join is 10x10."""
     emb = load_table(spark, sf_dir, "embeddings")
     full10 = (
-        with_score(emb, QV_MAIN, QN_MAIN)
+        with_score(emb, QV_MAIN)
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(10)
         .select("vec_id")
     )
     emb16 = emb.withColumn("emb16", F.expr("slice(embedding, 1, 16)"))
     pref10 = (
-        with_score(emb16, _QV16, _QN16, vec_col="emb16")
+        with_score(emb16, _QV16, vec_col="emb16")
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(10)
         .select("vec_id")
@@ -7176,11 +7102,7 @@ def _semdedup_assign_sql(c_expr: str) -> str:
         SELECT e.vec_id, e.embedding, c.vec_id AS cluster,
                row_number() OVER (
                  PARTITION BY e.vec_id
-                 ORDER BY (CASE WHEN sqrt({V.sql_dot('e.embedding', 'e.embedding')}) = 0
-                        OR sqrt({V.sql_dot('c.embedding', 'c.embedding')}) = 0 THEN 0.0
-                       ELSE {V.sql_dot('e.embedding', 'c.embedding')}
-                            / (sqrt({V.sql_dot('e.embedding', 'e.embedding')})
-                               * sqrt({V.sql_dot('c.embedding', 'c.embedding')})) END) DESC,
+                 ORDER BY {V.sql_cosine('e.embedding', 'c.embedding')} DESC,
                        c.vec_id ASC) AS rn
         FROM embeddings e
         CROSS JOIN (SELECT * FROM embeddings WHERE vec_id < {c_expr}) c)
@@ -7325,11 +7247,7 @@ def semdedup_adaptive_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT e.vec_id, e.embedding, c.c_id AS cluster,
                row_number() OVER (
                  PARTITION BY e.vec_id
-                 ORDER BY (CASE WHEN sqrt({V.sql_dot('e.embedding', 'e.embedding')}) = 0
-                        OR sqrt({V.sql_dot('c.c_vec', 'c.c_vec')}) = 0 THEN 0.0
-                       ELSE {V.sql_dot('e.embedding', 'c.c_vec')}
-                            / (sqrt({V.sql_dot('e.embedding', 'e.embedding')})
-                               * sqrt({V.sql_dot('c.c_vec', 'c.c_vec')})) END) DESC,
+                 ORDER BY {V.sql_cosine('e.embedding', 'c.c_vec')} DESC,
                        c.c_id ASC) AS rn
         FROM gemb e CROSS JOIN cents c)
       WHERE rn = 1),
@@ -8455,7 +8373,7 @@ def hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenized frame across its stats and scoring passes."""
     corpus = _corpus(spark, sf_dir)
     sem = (
-        with_score(corpus, QV_DOC, QN_DOC)
+        with_score(corpus, QV_DOC)
         .select("doc_id", "score")
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(20)
@@ -8530,7 +8448,7 @@ def mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-collect contract). Floor-scaled objective = engine-exact."""
     emb = load_table(spark, sf_dir, "embeddings")
     cand = (
-        with_score(emb, QV_MAIN, QN_MAIN)
+        with_score(emb, QV_MAIN)
         .select("vec_id", "score", "embedding")
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(10)
@@ -8995,7 +8913,7 @@ def rag_retrieval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes (S.tokenized; the semantic leg reads embeddings, not text)."""
     corpus = _corpus(spark, sf_dir)
     sem = (
-        with_score(corpus, QV_DOC, QN_DOC)
+        with_score(corpus, QV_DOC)
         .select("doc_id", "score")
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(20)

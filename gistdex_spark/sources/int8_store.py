@@ -89,7 +89,7 @@ def search_stored_int8(
     scan-form ``ann_int8`` by construction (same clamp/floor codes
     persisted at write time, same ``code_dot * scale`` estimator, same
     tie-breaks), but the shortlist pass reads only (id, codes, scale)."""
-    from gistdex_spark.functions.vectors import cosine
+    from gistdex_spark.operators.search import with_score
 
     qint = int8_query_codes(query_vec)
     store = spark.read.parquet(path)
@@ -131,16 +131,13 @@ def search_stored_int8(
         .limit(shortlist)
         .select(id_col)
     )
-    qlit = F.lit([float(x) for x in query_vec])
     rerank = (
         spark.read.parquet(path)
         .select(id_col, embedding_col)
         .join(F.broadcast(short), id_col)
     )
     return (
-        rerank.withColumn(
-            "score", F.round(cosine(embedding_col, qlit), 6)
-        )
+        with_score(rerank, query_vec, embedding_col)
         .select(id_col, "score")
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)

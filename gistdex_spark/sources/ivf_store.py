@@ -62,19 +62,18 @@ def probe_stored(
     the scan carries ``cluster IN (...)`` on the partition column:
     PartitionFilters in the plan, pruned before IO.
     """
-    from gistdex_spark.functions.vectors import cosine
+    from gistdex_spark.operators.search import with_score
 
-    qlit = F.lit([float(x) for x in query_vec])
     cells = [
         int(r["c_id"])
-        for r in centroids.withColumn("qs", cosine("c_vec", qlit))
-        .orderBy(F.desc("qs"), F.asc("c_id"))
+        for r in with_score(centroids, query_vec, "c_vec")
+        .orderBy(F.desc("score"), F.asc("c_id"))
         .limit(nprobe)
         .collect()
     ]
     scan = spark.read.parquet(path).filter(F.col("cluster").isin(cells))
     return (
-        scan.withColumn("score", F.round(cosine(embedding_col, qlit), 6))
+        with_score(scan, query_vec, embedding_col)
         .select(id_col, "score")
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)

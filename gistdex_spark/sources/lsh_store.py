@@ -137,17 +137,16 @@ def search_stored(
     ``ann_lsh_multitable``, but the bucket arithmetic is PRE-PAID — the
     filter touches only the partition column and L-1 stored ints, so
     pruning happens before the embedding column is read."""
-    from gistdex_spark.functions.vectors import cosine
+    from gistdex_spark.operators.search import with_score
 
     cond = None
     for t in range(n_tables):
         probes = probe_buckets(query_vec, nbits, radius, offset=t * nbits)
         c = F.col(f"b{t}").isin(probes)
         cond = c if cond is None else (cond | c)
-    qlit = F.lit([float(x) for x in query_vec])
     scan = spark.read.parquet(path).filter(cond)
     return (
-        scan.withColumn("score", F.round(cosine(embedding_col, qlit), 6))
+        with_score(scan, query_vec, embedding_col)
         .select(id_col, "score")
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)
@@ -181,7 +180,7 @@ def search_stored_vote(
     first touches a few bytes per row and the second prunes to
     ``shortlist`` rows — versus the scan form's single pass that must
     materialize the embedding for every row it heaps."""
-    from gistdex_spark.functions.vectors import cosine
+    from gistdex_spark.operators.search import with_score
 
     votes = table_votes(
         query_vec,
@@ -198,16 +197,13 @@ def search_stored_vote(
         .limit(shortlist)
         .select(id_col)
     )
-    qlit = F.lit([float(x) for x in query_vec])
     rerank = (
         spark.read.parquet(path)
         .select(id_col, embedding_col)
         .join(F.broadcast(short), id_col)
     )
     return (
-        rerank.withColumn(
-            "score", F.round(cosine(embedding_col, qlit), 6)
-        )
+        with_score(rerank, query_vec, embedding_col)
         .select(id_col, "score")
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)

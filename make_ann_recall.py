@@ -26,9 +26,9 @@ sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F
 
 from gistdex_spark.functions.embedder import embed_text
-from gistdex_spark.functions.vectors import cosine
 from gistdex_spark.operators import ivf as IVF
 from gistdex_spark.operators import pq as PQ
+from gistdex_spark.operators.search import with_score
 from gistdex_spark.session import get_spark
 from gistdex_spark.sources.tables import load_table, spread
 
@@ -43,11 +43,10 @@ QUERY_TEXTS = [
 
 
 def exact_topk(emb, qv, k=K):
-    qlit = F.lit([float(x) for x in qv])
     return [
         r["vec_id"]
-        for r in emb.withColumn("s", cosine("embedding", qlit))
-        .orderBy(F.desc("s"), F.asc("vec_id"))
+        for r in with_score(emb, qv)
+        .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(k)
         .collect()
     ]

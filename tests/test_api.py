@@ -4,6 +4,7 @@ mirroring the reference's integration flow
 
 from __future__ import annotations
 
+import math
 from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
@@ -12,6 +13,7 @@ from pyspark.sql import functions as F
 from gistdex_spark.api import GistdexSpark
 from gistdex_spark.functions.embedder import embed_text
 from gistdex_spark.functions.text import query_words
+from gistdex_spark.functions.vectors import cosine, vector_literal
 from gistdex_spark.operators.search import seq_norm, with_score
 
 
@@ -108,7 +110,7 @@ def _python_search(engine, query, k, source_type=None, hybrid=False, w=0.3):
         for a, b in zip(e, qv):
             nn += a * a
             d += a * b
-        ne = nn**0.5
+        ne = math.sqrt(nn)
         cand.append((0.0 if ne == 0.0 else _round6(d / (ne * qn)), r.id, r.content))
     cand.sort(key=lambda t: (-t[0], t[1]))
     words = query_words(query)
@@ -140,16 +142,47 @@ def test_search_scores_equal_python_cosine(engine, kw):
 
 def test_with_score_edge_cases(spark):
     """Zero vector -> 0.0; a null embedding, a null element or a length
-    mismatch -> null; an existing score column is replaced in place."""
+    mismatch -> null; an existing score column is replaced in place. A
+    zero query vector scores every row 0.0, as ``cosine`` does, instead
+    of dividing by a zero norm (an error under ANSI mode)."""
     df = spark.createDataFrame(
         [(1, [0.0, 0.0], 9.0), (2, None, 9.0), (3, [1.0, None], 9.0),
          (4, [1.0], 9.0), (5, [3.0, 4.0], 9.0)],
         "id INT, embedding ARRAY<FLOAT>, score DOUBLE",
     )
-    out = with_score(df, [1.0, 0.0], 1.0)
+    out = with_score(df, [1.0, 0.0])
     assert out.columns == ["id", "embedding", "score"]
     got = {r.id: r.score for r in out.collect()}
     assert got == {1: 0.0, 2: None, 3: None, 4: None, 5: 0.6}
+    zero = with_score(df, [0.0, 0.0])
+    assert zero.columns == ["id", "embedding", "score"]
+    assert {r.id: r.score for r in zero.collect()} == dict.fromkeys(range(1, 6), 0.0)
+    want = df.withColumn("q", vector_literal([0.0, 0.0])).select(
+        "id", F.round(cosine("embedding", "q"), 6).alias("score")
+    )
+    assert {r.id: r.score for r in want.collect()} == dict.fromkeys(range(1, 6), 0.0)
+
+
+def test_with_score_query_norm_rounds_like_the_engine(spark):
+    """The query norm is a correctly rounded square root, like the
+    engine's ``sqrt``. For this query the fold sum s = 0.128594 gives
+    ``s**0.5`` one ulp above ``math.sqrt(s)``, and this row's score sits
+    on the 6-dp rounding boundary, so that ulp flips the rounded score
+    (0.850861 vs 0.85086)."""
+    qv = [0.313, 0.175]
+    s = qv[0] * qv[0] + qv[1] * qv[1]
+    assert s**0.5 != math.sqrt(s)
+    df = spark.createDataFrame(
+        [(1, [0.556492120866065, 1.0])], "id INT, embedding ARRAY<DOUBLE>"
+    )
+    got = with_score(df, qv).first().score
+    want = (
+        df.withColumn("q", vector_literal(qv))
+        .select(F.round(cosine("embedding", "q"), 6).alias("s"))
+        .first()
+        .s
+    )
+    assert got == want == 0.850861
 
 
 def test_search_batch_topk_per_query(engine):

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from gistdex_spark.functions.vectors import cosine
+from gistdex_spark.functions.vectors import cosine, vector_literal
 from gistdex_spark.operators.ivf import (
     assign_clusters,
     first_c_centroids,
@@ -29,10 +29,10 @@ def qvec(emb):
 
 
 def _exact_topk(emb, qvec, k):
-    qlit = F.array(*[F.lit(float(x)) for x in qvec])
     return [
         r.vec_id
-        for r in emb.withColumn("s", cosine("embedding", qlit))
+        for r in emb.withColumn("q", vector_literal(qvec))
+        .withColumn("s", cosine("embedding", "q"))
         .orderBy(F.desc("s"), F.asc("vec_id"))
         .limit(k)
         .collect()
@@ -97,9 +97,9 @@ def test_probe_never_scans_other_cells(emb, qvec):
     try:
         from gistdex_spark.operators.ivf import probe
 
-        qlit = F.array(*[F.lit(float(x)) for x in qvec])
         qcell = (
-            cents.withColumn("qs", cosine("c_vec", qlit))
+            cents.withColumn("q", vector_literal(qvec))
+            .withColumn("qs", cosine("c_vec", "q"))
             .orderBy(F.desc("qs"), F.asc("c_id"))
             .first()
             .c_id

@@ -46,12 +46,12 @@ def test_layout_is_partitioned_by_cluster(spark, store):
 def test_probe_reads_only_probed_partitions(spark, store, cents):
     """The scale claim itself: with nprobe=2 of 8 cells, every file the
     probe touches lives under one of the two probed cluster dirs."""
-    from gistdex_spark.functions.vectors import cosine
+    from gistdex_spark.functions.vectors import cosine, vector_literal
 
-    qlit = F.lit([float(x) for x in QV_MAIN])
     probed = [
         int(r["c_id"])
-        for r in cents.withColumn("qs", cosine("c_vec", qlit))
+        for r in cents.withColumn("q", vector_literal(QV_MAIN))
+        .withColumn("qs", cosine("c_vec", "q"))
         .orderBy(F.desc("qs"), F.asc("c_id"))
         .limit(2)
         .collect()

@@ -36,9 +36,8 @@ def test_tfidf_search_is_semantic(embedded, spark):
 
     target = embedded.orderBy("doc_id").first()
     qv = list(target.embedding)
-    n = sum(x * x for x in qv) ** 0.5
     top = (
-        with_score(embedded, qv, n)
+        with_score(embedded, qv)
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .select("doc_id", "score")
         .first()

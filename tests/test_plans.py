@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gistdex_spark.plans.inspect import (
+    analyzed_plan,
     codegen_compiles,
     collect_jobs,
     executed_plan,
@@ -62,20 +63,35 @@ def engine(spark, tmp_path_factory):
 _SEARCH_MODES = [{}, {"hybrid": True}, {"source_type": "code"}]
 
 
+# Registry queries that score rows against a literal query vector.
+_LITERAL_SCORED = [
+    "knn_topk",
+    "ann_lsh_bucket",
+    "ann_lsh_vote",
+    "ann_binary_sign",
+    "ann_int8_rerank",
+    "ann_pq_search",
+]
+
+
 @pytest.fixture(scope="module")
 def scored_frames(q, engine):
-    return [q("knn_topk")] + [
+    return [q(name) for name in _LITERAL_SCORED] + [
         engine.search("spark join", k=3, **kw) for kw in _SEARCH_MODES
     ]
 
 
 def test_scoring_ships_query_vector_as_literal(scored_frames):
     """The query vector is a plan literal: no pickled RDD of it and no
-    broadcast cross join, which cost a whole Spark job per search."""
+    broadcast cross join, which cost a whole Spark job per search. It is
+    ONE literal node, not a CreateArray over one literal per element,
+    which the optimizer folds away but the analyzer still has to build
+    (``array(`` over numeric literals in the analyzed plan)."""
     for df in scored_frames:
         plan = executed_plan(df)
         assert "ExistingRDD" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
+        assert not re.search(r"\barray\(-?\d", analyzed_plan(df))
 
 
 def test_scoring_evaluates_row_norm_once(scored_frames):

@@ -50,11 +50,11 @@ def test_adc_table_shape(books):
 def test_pq_recall_vs_exact(spark, emb, books):
     from pyspark.sql import functions as F
 
-    from gistdex_spark.queries import QN_MAIN, with_score
+    from gistdex_spark.queries import with_score
 
     exact = {
         r["vec_id"]
-        for r in with_score(emb, QV_MAIN, QN_MAIN)
+        for r in with_score(emb, QV_MAIN)
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(10)
         .collect()
@@ -94,11 +94,11 @@ def test_ivfpq_recall_vs_exact(spark, emb, books):
 
     from gistdex_spark.operators.ivf import train_centroids
     from gistdex_spark.operators.pq import ivfpq_search
-    from gistdex_spark.queries import QN_MAIN, with_score
+    from gistdex_spark.queries import with_score
 
     exact = {
         r["vec_id"]
-        for r in with_score(emb, QV_MAIN, QN_MAIN)
+        for r in with_score(emb, QV_MAIN)
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(10)
         .collect()
