@@ -51,24 +51,6 @@ def _spread(df: DataFrame) -> DataFrame:
     return spread(df)
 
 
-def shingle_hashes(df: DataFrame, content_col: str = "text", n: int = 5) -> DataFrame:
-    """(doc_id, h) — distinct char-n-gram 60-bit hashes per document."""
-    c = f"lower({content_col})"
-    grams = (
-        f"transform(sequence(1, greatest(length({c}) - {n - 1}, 1)), "
-        f"i -> substring({c}, i, {n}))"
-    )
-    # array_distinct dedupes per doc locally; no global distinct — MIN is
-    # duplicate-insensitive, so the extra shuffle would buy nothing.
-    return (
-        df.select("doc_id", F.explode(F.expr(f"array_distinct({grams})")).alias("g"))
-        .select(
-            "doc_id",
-            F.expr("cast(conv(substring(md5(g), 1, 15), 16, 10) as bigint)").alias("h"),
-        )
-    )
-
-
 def minhash_signatures(
     df: DataFrame, content_col: str = "text", num_hashes: int = 16, n: int = 5
 ) -> DataFrame:

@@ -185,54 +185,10 @@ def train_ivfpq(
     return cents, _fit_codebooks(X, m, ksub, seed, max_iter)
 
 
-def _codebook_lit(book: list[list[float]]) -> F.Column:
-    # ONE nested-array Literal node (Spark 4 F.lit accepts nested lists)
-    # instead of ksub*dsub Literal + CreateArray nodes: the analyzer and
-    # codegen cost of the encode plan is proportional to the expression
-    # TREE size, and the flat literal keeps it constant in ksub*dsub.
-    return F.lit([[float(x) for x in c] for c in book])
-
-
-def pq_codes_col(
-    codebooks: list[list[list[float]]], normed_vec: F.Column
-) -> F.Column:
-    """The ARRAY<INT> of per-subspace nearest sub-centroid ids as a pure
-    column expression over an already-normalized vector — composable into
-    any map-only pass (encode_pq, the IVF-PQ index build)."""
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-
-    def argmin_code(s: int) -> F.Column:
-        sub = F.slice(normed_vec, s * dsub + 1, dsub)
-        init = F.struct(
-            F.lit(float("inf")).alias("d"), F.lit(-1).alias("c")
-        )
-
-        def step(acc, pair):
-            # squared euclidean of sub vs centroid (index-order fold)
-            d = F.aggregate(
-                F.zip_with(sub, pair["cv"], lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc2, x: acc2 + x,
-            )
-            return F.when(
-                d < acc["d"], F.struct(d.alias("d"), pair["ci"].alias("c"))
-            ).otherwise(acc)
-
-        pairs = F.arrays_zip(
-            _codebook_lit(codebooks[s]).alias("cv"),
-            F.lit(list(range(len(codebooks[s])))).alias("ci"),
-        )
-        return F.aggregate(pairs, init, step)["c"]
-
-    return F.array(*[argmin_code(s) for s in range(m)])
-
-
 def _pq_codes_np(codebooks):
     """Closure: (n x D) float matrix -> (n x m) int codes, vectorized.
     Distance per subspace is one (n x ksub x dsub) broadcastified matrix
-    op; argmin ties resolve to the LOWEST index — the same rule as the
-    expression fold's strict-less update."""
+    op; argmin ties resolve to the LOWEST index."""
     import numpy as np  # noqa: PLC0415
 
     mats = [np.asarray(b, dtype=np.float64) for b in codebooks]
@@ -242,8 +198,9 @@ def _pq_codes_np(codebooks):
         # Sum of squares accumulated SEQUENTIALLY over columns (a Python
         # loop, vectorized across rows): np.linalg.norm switches to
         # pairwise summation for dim >= 16, and a last-ulp difference vs
-        # the sequential folds in pq_codes_col / the DuckDB oracle could
-        # flip a near-tie argmin and silently diverge codes.
+        # the index-order folds of the DuckDB oracle
+        # (functions/vectors.sql_dot) could flip a near-tie argmin and
+        # silently diverge codes.
         ss = np.zeros(len(X), dtype=np.float64)
         for j in range(X.shape[1]):
             ss = ss + X[:, j] * X[:, j]
@@ -253,7 +210,7 @@ def _pq_codes_np(codebooks):
         codes = np.empty((len(X), m), dtype=np.int32)
         for s in range(m):
             sub = Xn[:, s * dsub:(s + 1) * dsub]
-            # same sequential left fold as pq_codes_col's aggregate —
+            # the same index-order left fold as the DuckDB oracle's —
             # np.sum over the dsub axis would go pairwise for dsub >= 16
             d = np.zeros((len(X), mats[s].shape[0]), dtype=np.float64)
             for j in range(dsub):
@@ -275,10 +232,9 @@ def encode_pq(
     euclidean distance on the normalized subvector. Still map-only (no
     shuffle), but the argmins run as VECTORIZED numpy over Arrow batches
     — each batch is one (n x ksub x dsub) matrix op per subspace, the
-    FAISS encode shape. The pure-expression form (:func:`pq_codes_col`,
-    kept for SQL-only deployments) pays interpreted HOF cost per row
-    because lambda folds never enter codegen — measured ~4x slower on
-    the sf0.1 encode. Tie-break (lowest index) matches the fold."""
+    FAISS encode shape. A pure-expression fold would pay interpreted
+    HOF cost per row because lambda folds never enter codegen — measured
+    ~4x slower on the sf0.1 encode. Ties resolve to the lowest index."""
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
 

@@ -152,7 +152,3 @@ def join_strategies(df: DataFrame) -> list[str]:
         r"|BroadcastNestedLoopJoin|CartesianProduct)",
         plan,
     )
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    return len(set(re.findall(r"WholeStageCodegen \((\d+)\)", executed_plan(df))))

@@ -1033,9 +1033,7 @@ def eval_decontaminate_minhash_stored(
     decontaminate_pairs_stored is frame-equal to the recompute form's
     minhash_pairs_between by the store's shared-banding contract, so
     the same DuckDB oracle gates this census end-to-end — including
-    the store write+probe path. Streaming admission against the same
-    store (stream_neardup_filter_minhash_stored) is
-    eval-decontamination-at-ingest."""
+    the store write+probe path."""
     import tempfile  # noqa: PLC0415
 
     from gistdex_spark.sources.minhash_store import (  # noqa: PLC0415
@@ -2772,8 +2770,7 @@ def dedup_ngram_jaccard_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ==========================================================================
-# Events (windowed aggregation + sessionization; batch forms of the
-# Structured Streaming demo in gistdex_spark/streaming).
+# Events (windowed aggregation + sessionization).
 # ==========================================================================
 
 
@@ -3406,8 +3403,7 @@ def ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_dedup_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch form of the streaming dedup (streaming/events.py): unique
-    event count per type."""
+    """Unique event count per type."""
     ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.countDistinct("event_id").cast("bigint").alias("n_unique")

@@ -22,12 +22,23 @@ from pyspark.sql import SparkSession
 # JVM this call starts.
 CODEGEN_CACHE_ENTRIES = 1000
 
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "gistdex-spark",
     cpus: int | str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
+    """Start (or join) the local session with this package's configs.
+
+    Python workers get the package's parent directory on their
+    ``PYTHONPATH``, so a UDF pickled by reference to ``gistdex_spark``
+    imports from any working directory (``pyspark.daemon`` otherwise
+    finds the package only through the driver's cwd). Like every other
+    conf here, this applies only to a JVM this call starts: under
+    spark-submit, or when a SparkContext is already running, the caller
+    must ship the package to the workers itself."""
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle = int(shuffle_partitions or os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
     builder = (
@@ -67,18 +78,20 @@ def get_spark(
         # can leave partial task outputs visible. Store writes here are
         # per-run scratch (overwritten next run), guarded by their own
         # commit protocol (graph_store's atomic pointer flip, _meta.json
-        # sidecars written after data), or — for the one path where
-        # partial visibility WOULD corrupt recovery, the persistent
-        # packed-shard append whose redelivery guard filters on stored
-        # max doc_id — explicitly scoped back to v1 per-write plus a
-        # stream-contiguity check (sources/shard_writer._with_committer
-        # / _check_untorn; r14 ADVICE high).
+        # sidecars written after data). The persistent packed-shard
+        # append runs under v2 too: its tiling check
+        # (sources/shard_writer._check_untorn) raises on an interior
+        # tear, but a crash that published only the lower part of a
+        # batch looks like a shorter append and is not caught.
         .config(
             "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
             "2",
         )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Spark merges this with its own pyspark path and the worker's
+        # inherited PYTHONPATH.
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
     )
     # file:// without libhadoop.so (every pip-installed PySpark node,
     # this sandbox included) forks /bin/chmod per created path —

@@ -320,8 +320,8 @@ def write_graph_store(
     """Bootstrap: members (lsh_store layout, partitioned by b0) + the
     batch multitable edge list, written under a fresh version dir and
     committed by the pointer flip — a crash mid-bootstrap leaves the
-    store uninitialized (never half-written), so a streaming replay
-    simply bootstraps again.
+    store uninitialized (never half-written), so a rerun simply
+    bootstraps again.
 
     ``keep_versions`` is recorded in the store-level sidecar as the
     STORE's retention policy (r13 ADVICE: retention is a property of

@@ -39,7 +39,6 @@ from pyspark.sql.datasource import (
     Filter,
     GreaterThan,
     InputPartition,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
@@ -170,86 +169,6 @@ class ChunkJsonlWriter(DataSourceWriter):
                     os.remove(p)
 
 
-class ChunkJsonlStreamReader(SimpleDataSourceStreamReader):
-    """Streaming tail of a chunk_jsonl directory (Spark 4 Python
-    DataSource streaming API).
-
-    Offset model: a lexicographic FILE-NAME watermark. Producers append
-    whole files with strictly increasing names (the same contract as
-    Kafka log segments or a date-partitioned landing zone); each
-    micro-batch reads every file whose name sorts after the watermark
-    and advances it to the highest name read. The offset stays O(1) no
-    matter how many files accumulate, and `readBetweenOffsets` replays
-    any (start, end] range deterministically for recovery, so the source
-    is exactly-once under checkpointing.
-    """
-
-    def __init__(self, schema: StructType, options: dict) -> None:
-        self.schema = schema
-        self.root = options.get("path")
-        if not self.root:
-            raise ValueError("chunk_jsonl stream requires option 'path'")
-        self.fields = [f.name for f in schema.fields]
-        # maxFilesPerTrigger bound (same opt-in option as Spark's file
-        # source): read() materializes the batch on the driver, so a cold
-        # start against a large backlog (watermark "") should drain over
-        # several bounded micro-batches, not one unbounded driver list.
-        # Opt-in because a SimpleDataSourceStreamReader snapshots ONE
-        # offset per availableNow run — a capped batch under availableNow
-        # drains the remainder on subsequent runs (or continuously under
-        # a processingTime trigger), which is the caller's trade to make.
-        raw_cap = options.get("maxFilesPerTrigger")
-        self.max_files = int(raw_cap) if raw_cap is not None else None
-        if self.max_files is not None and self.max_files < 1:
-            raise ValueError("maxFilesPerTrigger must be >= 1")
-
-    def _names(self) -> list[str]:
-        if not os.path.isdir(self.root):
-            return []
-        out = []
-        for dirpath, _dirs, files in os.walk(self.root):
-            for f in files:
-                if f.endswith(".jsonl"):
-                    out.append(
-                        os.path.relpath(os.path.join(dirpath, f), self.root)
-                    )
-        return sorted(out)
-
-    def _rows_for(self, names: list[str]):
-        for name in names:
-            with open(os.path.join(self.root, name), encoding="utf-8") as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    rec = json.loads(line)
-                    yield tuple(rec.get(f) for f in self.fields)
-
-    def initialOffset(self) -> dict:
-        return {"watermark": ""}
-
-    def read(self, start: dict):
-        wm = start.get("watermark", "")
-        # Bounded batch when capped: take only the first maxFilesPerTrigger
-        # fresh files and advance the watermark to the last one TAKEN — the
-        # remainder of a backlog arrives in the following micro-batches
-        # (the watermark advances incrementally, so nothing is skipped).
-        fresh = [n for n in self._names() if n > wm]
-        if self.max_files is not None:
-            fresh = fresh[: self.max_files]
-        end = {"watermark": fresh[-1] if fresh else wm}
-        # materialized, not a generator: Spark pickles the prefetched
-        # batch to serve replay without re-listing the directory
-        return list(self._rows_for(fresh)), end
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        lo = start.get("watermark", "")
-        hi = end.get("watermark", "")
-        return list(
-            self._rows_for([n for n in self._names() if lo < n <= hi])
-        )
-
-
 class ChunkJsonlDataSource(DataSource):
     """`spark.dataSource.register(ChunkJsonlDataSource)` then
     `spark.read.format("chunk_jsonl").option("path", d).load()`."""
@@ -268,6 +187,3 @@ class ChunkJsonlDataSource(DataSource):
         if overwrite and self.options.get("path") and os.path.isdir(self.options["path"]):
             shutil.rmtree(self.options["path"])
         return ChunkJsonlWriter(schema, self.options, overwrite)
-
-    def simpleStreamReader(self, schema: StructType) -> ChunkJsonlStreamReader:
-        return ChunkJsonlStreamReader(schema, self.options)

@@ -6,11 +6,12 @@ The reference mutates rows in place through its adapters —
 file layout entirely. On a parquet lake both concerns become FILE
 REWRITES, and both are daily-operations requirements at 100 TB:
 
-- **Compaction**: streaming ingest (`streaming/ingest.py`, the
-  chunk_jsonl landing zone) accretes many small files; scans then pay
-  per-file open/footer costs and lose split parallelism. `compact_store`
-  rewrites a directory to ~target-sized files — the OPTIMIZE of
-  Delta/Iceberg, expressed as read → repartition → atomic swap.
+- **Compaction**: incremental ingest (`index_text(incremental=True)`
+  appends from a chunk_jsonl landing zone) accretes many small files;
+  scans then pay per-file open/footer costs and lose split
+  parallelism. `compact_store` rewrites a directory to ~target-sized
+  files — the OPTIMIZE of Delta/Iceberg, expressed as read →
+  repartition → atomic swap.
 - **Merge**: `merge_upsert` is the MERGE INTO ... WHEN MATCHED UPDATE /
   WHEN NOT MATCHED INSERT plan shape: updates ∪ (base ⟕̸ updates) — one
   anti-join, one rewrite, last-writer-wins. At lake scale the rewrite is

@@ -214,8 +214,8 @@ def _new_old_pairs(
     threshold: float = 0.5,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Directed form (new_id, old_id, est_jaccard) — the streaming
-    admission filter needs to know which BATCH document matched."""
+    """Directed form (new_id, old_id, est_jaccard) — decontamination
+    needs to know which BATCH document matched."""
     if num_hashes % bands != 0:
         raise ValueError("num_hashes must be divisible by bands")
     p0_chars = _validated_geometry(path, num_hashes, bands, n)
@@ -348,9 +348,7 @@ def decontaminate_pairs_stored(
     estimate; pinned in tests/test_minhash_store.py) with the benchmark
     side never re-shingled. This is the daily-ingest hygiene shape: the
     eval suites are fixed, so their signatures are written once and
-    every training batch probes them; pointing
-    ``streaming/ingest.stream_neardup_filter_minhash_stored`` at the
-    same store gives eval-decontamination-at-ADMISSION for free."""
+    every training batch probes them."""
     return _new_old_pairs(
         spark, path, batch, content_col=content_col, num_hashes=num_hashes,
         bands=bands, n=n, threshold=threshold, id_col=id_col,

@@ -66,38 +66,16 @@ from gistdex_spark.materialize import Materialize, Materializer
 from gistdex_spark.operators.pipeline import global_prefix_sum
 
 
-def _with_committer(writer, committer_version):
-    """Per-WRITE FileOutputCommitter algorithm override: DataFrameWriter
-    options are injected into the write job's Hadoop conf
-    (``newHadoopConfWithOptions``), so this scopes the committer to one
-    write without touching the session-wide v2 default (session.py).
-    The streaming shard-append path passes ``"1"``: v2 publishes task
-    outputs immediately, so a job dying mid-append leaves a torn batch
-    VISIBLE, and the replay's max-doc redelivery guard would then drop
-    the batch's unwritten lower-doc rows forever (r14 ADVICE). With v1
-    nothing is visible until job commit; the remaining tear window (a
-    crash inside job commit itself) is caught by the contiguity
-    verification in :func:`append_packed_shards`. Plumbing is
-    empirically pinned by tests/test_shard_writer.py (an invalid
-    version must raise from inside the committer)."""
-    if committer_version is not None:
-        writer = writer.option(
-            "mapreduce.fileoutputcommitter.algorithm.version",
-            str(committer_version),
-        )
-    return writer
-
-
 def _check_untorn(stored, out_path: str) -> None:
     """Torn-store detection from the census scalars: written spans are
     disjoint by construction and a correct store tiles [0, total)
     exactly (test-pinned), so min(token_start) == 0 and
     sum(n_tokens) == max(token_end) iff no interior rows are missing. A
     tear that lost only the TOP of a batch is indistinguishable from a
-    shorter successful append and heals on replay; any interior hole
-    means a committer published part of a crashed job (v2 semantics) —
-    appending past it would freeze the gap into the stream, so raise
-    loudly instead of silently dropping the replayed rows."""
+    shorter successful append (replaying that batch then raises the
+    non-monotone error); any interior hole means a committer published
+    part of a crashed job (v2 semantics) — appending past it would
+    freeze the gap into the stream, so raise loudly instead."""
     stream_end = int(stored["stream_end"] or 0)
     sum_tokens = int(stored["sum_tokens"] or 0)
     min_start = int(stored["min_start"] or 0)
@@ -232,7 +210,6 @@ def write_packed_shards(
     token_count_col=None,
     materialize: Materialize | None = None,
     mode: str = "overwrite",
-    committer_version: str | None = None,
 ) -> None:
     """Write the packed shards + manifest for ``df`` (must carry
     ``doc_id`` and ``content_col``). ``token_count_col`` is the token
@@ -271,12 +248,9 @@ def write_packed_shards(
         # sort is injected and the in-file doc_id contract never depends
         # on the injected sort being stable.
         (
-            _with_committer(
-                staged.repartition("shard_id")
-                .sortWithinPartitions("shard_id", "doc_id")
-                .write.mode(mode),
-                committer_version,
-            )
+            staged.repartition("shard_id")
+            .sortWithinPartitions("shard_id", "doc_id")
+            .write.mode(mode)
             .partitionBy("shard_id")
             .parquet(out_path)
         )
@@ -293,8 +267,6 @@ def append_packed_shards(
     content_col: str = "text",
     token_count_col=None,
     materialize: Materialize | None = None,
-    stored_census: DataFrame | None = None,
-    committer_version: str | None = None,
 ) -> None:
     """Daily-ingest form: continue the token stream where the written
     shards end. The batch's spans start at the stored stream length
@@ -322,15 +294,7 @@ def append_packed_shards(
     tests/test_shard_writer.py).
 
     ``materialize``: as for :func:`write_packed_shards`; it also takes
-    the stored census when this call reads it.
-
-    ``stored_census``: advanced seam for callers (the streaming mirror)
-    that already aggregated and materialized this store's census THIS
-    batch — must be the frame of :func:`read_shard_census` over
-    ``out_path``, current as of this append; anything staler breaks the
-    redelivery guard. It must be materialized: the manifest merge reads
-    it after the batch is written, when a fresh scan would count the
-    batch twice.
+    the stored census.
 
     ``df`` must be DETERMINISTIC, exactly as for
     :func:`write_packed_shards` (same spans-vs-payload split, same
@@ -338,15 +302,16 @@ def append_packed_shards(
     """
     with Materializer() as own:
         materialize = materialize or own
-        if stored_census is None:
-            # Shard-count rows, materialized so the guard, the offset
-            # scalar and the manifest merge all read one computed copy.
-            stored_census = materialize(read_shard_census(spark, out_path))
+        # Shard-count rows, materialized so the guard, the offset scalar
+        # and the manifest merge all read one computed copy (the merge
+        # runs after the batch is written, when a fresh scan would count
+        # the batch twice).
+        census = materialize(read_shard_census(spark, out_path))
         # ONE agg carries every guard scalar plus the torn-store tiling
         # check (r14 ADVICE: with committer v2 a crashed append can
-        # publish partial task output; the max-doc redelivery guard alone
-        # would then drop the replay's missing rows forever).
-        stored = stored_census.agg(
+        # publish partial task output; the max-doc guard alone would then
+        # accept appends past the hole and freeze it into the stream).
+        stored = census.agg(
             F.max("token_end").alias("stream_end"),
             F.max("doc_to").alias("max_doc"),
             F.sum("n_tokens").alias("sum_tokens"),
@@ -367,17 +332,14 @@ def append_packed_shards(
         )
         staged = _attach_payload(df, spans, content_col)
         (
-            _with_committer(
-                staged.repartition("shard_id")
-                .sortWithinPartitions("shard_id", "doc_id")
-                .write.mode("append"),
-                committer_version,
-            )
+            staged.repartition("shard_id")
+            .sortWithinPartitions("shard_id", "doc_id")
+            .write.mode("append")
             .partitionBy("shard_id")
             .parquet(out_path)
         )
         manifest = _merge_manifests(
-            stored_census.unionByName(_census_agg(spans))
+            census.unionByName(_census_agg(spans))
         )
         manifest.write.mode("overwrite").parquet(
             os.path.join(out_path, "_manifest")

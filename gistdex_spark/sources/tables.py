@@ -107,10 +107,6 @@ def _normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     """Round-robin repartition a low-split scan before compute-heavy
     per-row work.

@@ -17,17 +17,6 @@ def persistent_rdd_ids(spark) -> set[int]:
     return {r.id() for r in spark.sparkContext._jsc.getPersistentRDDs().values()}
 
 
-def drain(query, timeout: float) -> None:
-    """Wait for an availableNow query to finish, then stop it; a query
-    still active after ``timeout`` seconds fails the test."""
-    try:
-        assert query.awaitTermination(timeout), (
-            f"stream {query.name!r} still active after {timeout}s"
-        )
-    finally:
-        query.stop()
-
-
 @pytest.fixture(scope="session")
 def spark():
     from gistdex_spark.session import get_spark

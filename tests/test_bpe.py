@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -21,6 +23,7 @@ from gistdex_spark.functions.bpe import (
     token_count,
     train_bpe,
 )
+from tests.conftest import REPO_ROOT
 
 FIXTURE = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -152,6 +155,38 @@ def test_udf_equals_driver_reference(spark):
     assert len(got) == len(rows) > 0
     for r in rows:
         assert got[r["doc_id"]] == token_count(r["text"], merges), r["doc_id"]
+
+
+_FOREIGN_CWD_SCRIPT = f"""
+import sys
+sys.path.insert(0, {REPO_ROOT!r})
+from gistdex_spark.functions.bpe import bpe_token_count, load_merges
+from gistdex_spark.session import get_spark
+
+spark = get_spark("bpe-foreign-cwd", cpus=1)
+df = spark.createDataFrame([("low low lower",)], "text STRING")
+n = df.select(bpe_token_count("text", load_merges({FIXTURE!r}))).first()[0]
+print("COUNT", n)
+"""
+
+
+def test_udf_workers_import_the_package_from_a_foreign_cwd(tmp_path):
+    """A session from ``get_spark`` must let its Python workers import
+    ``gistdex_spark`` when the driver runs outside the repo and finds
+    the package only through its own ``sys.path``. A subprocess is
+    required: the test session's workers already run from the repo."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", _FOREIGN_CWD_SCRIPT],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    want = token_count("low low lower", load_merges(FIXTURE))
+    assert f"COUNT {want}" in proc.stdout.splitlines()
 
 
 def test_pinned_frames_roundtrip(spark):

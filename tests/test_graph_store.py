@@ -19,7 +19,7 @@ from gistdex_spark.sources.graph_store import (
     write_graph_store,
 )
 from gistdex_spark.sources.tables import load_table
-from tests.conftest import SF_CORRECTNESS, drain
+from tests.conftest import SF_CORRECTNESS
 
 K, NBITS, NT = 3, 4, 3
 
@@ -122,7 +122,8 @@ def test_update_applies_batch_and_next_increment_sees_it(
     """Two consecutive daily batches: after update_graph_store applies
     batch 1, the stored state (members + edges) must serve batch 2's
     increment such that the final graph equals one batch rebuild over
-    all three corpus slices."""
+    all three corpus slices — and so must the stored edge list once
+    batch 2 is applied too."""
     new, old = split
     b1 = new.filter(F.col("vec_id") < 500)
     b2 = new.filter(F.col("vec_id") >= 500)
@@ -140,58 +141,13 @@ def test_update_applies_batch_and_next_increment_sees_it(
         )
     )
     assert got == want
-
-
-def test_stream_graph_update_matches_batch_rebuild(spark, split, tmp_path):
-    """Streaming admission mirror (test_stream_ingest.py discipline):
-    micro-batches merged through stream_graph_update must leave the
-    stored graph equal to one batch rebuild over everything seen."""
-    import json as _json
-    import os
-
-    from gistdex_spark.streaming.ingest import stream_graph_update
-
-    new, old = split
-    path = str(tmp_path / "gstore")
-    write_graph_store(old, path, k=K, nbits=NBITS, n_tables=NT)
-
-    src = str(tmp_path / "emb_src")
-    os.makedirs(src, exist_ok=True)
-    rows = new.collect()
-    # two micro-batch files
-    for i, chunk in enumerate([rows[: len(rows) // 2], rows[len(rows) // 2 :]]):
-        with open(f"{src}/b{i}.json", "w") as f:
-            for r in chunk:
-                f.write(
-                    _json.dumps(
-                        {"vec_id": r.vec_id, "embedding": list(r.embedding)}
-                    )
-                    + "\n"
-                )
-    stream = (
-        spark.readStream.schema("vec_id BIGINT, embedding ARRAY<DOUBLE>")
-        # one file per micro-batch: the availableNow run really exercises
-        # TWO consecutive merges, not one coalesced batch
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-    )
-    q = stream_graph_update(
-        stream, path, k=K, nbits=NBITS, n_tables=NT,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    drain(q, 180)
-
-    got = _frame(
+    update_graph_store(spark, path, b2, k=K, nbits=NBITS, n_tables=NT)
+    stored = _frame(
         spark.read.parquet(graph_store.edges_path(path)).select(
             "src_id", "nbr_id", "sim", "rk"
         )
     )
-    want = _frame(
-        knn_graph_multitable(
-            old.unionByName(new), k=K, nbits=NBITS, n_tables=NT
-        )
-    )
-    assert got == want
+    assert stored == want
 
 
 def _crash_at(monkeypatch, name):
@@ -271,8 +227,8 @@ def test_bootstrap_crash_leaves_store_uninitialized(
 ):
     """A crash mid-bootstrap must leave NO store (never a half-written
     one): the r12 bootstrap wrote members before edges, so a crash
-    between the two left members the streaming path would misread as an
-    initialized store with an absent edge list."""
+    between the two left members that read as an initialized store with
+    an absent edge list."""
     _, old = split
     path = str(tmp_path / "store")
     _crash_at(monkeypatch, "_flip_current")

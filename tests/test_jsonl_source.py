@@ -12,7 +12,6 @@ from gistdex_spark.sources.jsonl_source import (
     ChunkJsonlReader,
     _list_jsonl,
 )
-from tests.conftest import drain
 
 ROWS = [
     ("s1", 0, "alpha", "en"),
@@ -118,139 +117,3 @@ def test_overwrite_mode_replaces(registered, tmp_path):
     ).save()
     back = spark.read.format("chunk_jsonl").option("path", d).load()
     assert back.count() == 1
-
-
-def test_stream_reads_only_new_files_across_batches(spark, tmp_path):
-    """The streaming form of the source: a checkpointed availableNow run
-    picks up exactly the files appended since the previous run."""
-    import json as _json
-
-    root = tmp_path / "landing"
-    root.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-
-    def emit(name, rows):
-        with open(root / name, "w", encoding="utf-8") as fh:
-            for r in rows:
-                fh.write(_json.dumps(r) + "\n")
-
-    emit("seq-000.jsonl", [
-        {"source_id": "s1", "chunk_index": 0, "content": "a", "lang": "en"},
-        {"source_id": "s1", "chunk_index": 1, "content": "b", "lang": "en"},
-    ])
-    emit("seq-001.jsonl", [
-        {"source_id": "s2", "chunk_index": 0, "content": "c", "lang": "ja"},
-    ])
-
-    from gistdex_spark.sources.jsonl_source import ChunkJsonlDataSource
-
-    try:
-        spark.dataSource.register(ChunkJsonlDataSource)
-    except Exception:
-        pass  # already registered by another test in this session
-
-    out = str(tmp_path / "out")
-
-    def run_batch():
-        q = (
-            spark.readStream.format("chunk_jsonl")
-            .option("path", str(root))
-            .load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        drain(q, 120)
-
-    def sunk():
-        return {
-            (r.source_id, r.chunk_index)
-            for r in spark.read.parquet(out).collect()
-        }
-
-    run_batch()
-    first = sunk()
-    assert first == {("s1", 0), ("s1", 1), ("s2", 0)}
-
-    emit("seq-002.jsonl", [
-        {"source_id": "s3", "chunk_index": 0, "content": "d", "lang": "en"},
-    ])
-    run_batch()
-    # only the new file's rows were appended — no re-read of old files
-    assert sunk() == first | {("s3", 0)}
-
-
-def test_stream_backlog_drains_in_bounded_batches(spark, tmp_path):
-    """A cold start against a backlog must drain over several bounded
-    micro-batches (maxFilesPerTrigger), not one unbounded driver batch —
-    and still deliver every row exactly once."""
-    import json as _json
-
-    from gistdex_spark.sources.jsonl_source import (
-        ChunkJsonlDataSource,
-        ChunkJsonlStreamReader,
-        DEFAULT_SCHEMA,
-    )
-
-    root = tmp_path / "landing"
-    root.mkdir()
-    for i in range(5):
-        with open(root / f"seq-{i:03d}.jsonl", "w", encoding="utf-8") as fh:
-            fh.write(_json.dumps({
-                "source_id": f"s{i}", "chunk_index": 0,
-                "content": f"c{i}", "lang": "en",
-            }) + "\n")
-
-    # Unit level: each read() takes at most maxFilesPerTrigger files and
-    # advances the watermark to the last file TAKEN.
-    from pyspark.sql.types import StructType
-
-    rdr = ChunkJsonlStreamReader(
-        StructType.fromDDL(DEFAULT_SCHEMA),
-        {"path": str(root), "maxFilesPerTrigger": "2"},
-    )
-    off = rdr.initialOffset()
-    seen, batches = [], 0
-    while True:
-        rows, off2 = rdr.read(off)
-        if off2 == off:
-            break
-        assert len(rows) <= 2
-        seen.extend(rows)
-        off = off2
-        batches += 1
-    assert batches == 3  # 2 + 2 + 1
-    assert {r[0] for r in seen} == {f"s{i}" for i in range(5)}
-
-    # End-to-end: a SimpleDataSourceStreamReader snapshots one offset per
-    # availableNow run, so a capped cold start drains INCREMENTALLY across
-    # checkpointed runs — 2 files, then 2, then 1 — never one unbounded
-    # driver batch, and never skipping or re-reading a file.
-    try:
-        spark.dataSource.register(ChunkJsonlDataSource)
-    except Exception:
-        pass
-    out = str(tmp_path / "out")
-
-    def run_once():
-        q = (
-            spark.readStream.format("chunk_jsonl")
-            .option("path", str(root))
-            .option("maxFilesPerTrigger", "2")
-            .load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        drain(q, 120)
-        return {r.source_id for r in spark.read.parquet(out).collect()}
-
-    assert len(run_once()) == 2
-    assert len(run_once()) == 4
-    assert run_once() == {f"s{i}" for i in range(5)}

@@ -10,7 +10,6 @@ from gistdex_spark.sources.maintenance import (
     compact_store,
     merge_upsert,
 )
-from tests.conftest import drain
 
 
 def test_compaction_reduces_files_and_preserves_rows(spark, tmp_path):
@@ -53,41 +52,33 @@ def test_merge_upsert_updates_inserts_and_is_idempotent(spark, tmp_path):
 
 def test_landing_zone_lifecycle(spark, tmp_path):
     """Composition of the ingest-side pieces: a chunk_jsonl landing zone
-    streamed through foreachBatch indexing into the chunk store, then
-    compacted — row counts survive every hop."""
+    read in two incremental batches and indexed into the chunk store,
+    then compacted — row counts survive every hop."""
     import json as _json
 
+    from gistdex_spark.api import GistdexSpark
     from gistdex_spark.sources.jsonl_source import ChunkJsonlDataSource
-    from gistdex_spark.streaming.ingest import stream_index
 
-    try:
-        spark.dataSource.register(ChunkJsonlDataSource)
-    except Exception:
-        pass
-
+    spark.dataSource.register(ChunkJsonlDataSource)
     landing = tmp_path / "landing"
     landing.mkdir()
-    with open(landing / "seq-000.jsonl", "w", encoding="utf-8") as fh:
-        for i in range(6):
-            fh.write(_json.dumps({
-                "source_id": f"doc-{i}",
-                "chunk_index": 0,
-                "content": f"text number {i} " * 40,
-                "lang": "en",
-            }) + "\n")
-
-    texts = (
-        spark.readStream.format("chunk_jsonl")
-        .option("path", str(landing))
-        .load()
-        .selectExpr("source_id", "content")
-    )
     store = str(tmp_path / "store")
-    q = stream_index(
-        texts, store, checkpoint_dir=str(tmp_path / "ckpt"),
-        query_name="landing_ingest",
-    )
-    drain(q, 180)
+    for seq, ids in enumerate([range(4), range(4, 6)]):
+        with open(landing / f"seq-{seq:03d}.jsonl", "w", encoding="utf-8") as fh:
+            for i in ids:
+                fh.write(_json.dumps({
+                    "source_id": f"doc-{i}",
+                    "chunk_index": 0,
+                    "content": f"text number {i} " * 40,
+                    "lang": "en",
+                }) + "\n")
+        texts = (
+            spark.read.format("chunk_jsonl")
+            .option("path", str(landing))
+            .load()
+            .selectExpr("source_id", "content")
+        )
+        GistdexSpark(spark, store).index_text(texts, incremental=True)
 
     chunks = spark.read.parquet(store)
     n = chunks.count()

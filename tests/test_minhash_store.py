@@ -19,7 +19,7 @@ from gistdex_spark.sources.minhash_store import (
     write_minhash_store,
 )
 from gistdex_spark.sources.tables import load_table
-from tests.conftest import SF_CORRECTNESS, drain, persistent_rdd_ids
+from tests.conftest import SF_CORRECTNESS
 
 # A loose threshold so the synthetic corpus yields a non-vacuous pair
 # set across all three (old×old / new×old / new×new) categories.
@@ -151,108 +151,6 @@ def test_update_applies_batch_and_replay_is_idempotent(
     base = _frame(minhash_lsh_pairs(old.unionByName(b1), threshold=TH))
     incr = _frame(incremental_pairs_full(spark, path, b2, threshold=TH))
     assert sorted(base + incr) == want
-
-
-def test_streaming_admission_matches_batch_decision(spark, tmp_path):
-    """The streaming mirror: micro-batches filtered through
-    stream_neardup_filter_minhash_stored must admit exactly the
-    documents with no stored near-dup at the threshold — the batch
-    operator's decision, with the corpus side read from signatures."""
-    import json as _json
-    import os
-
-    from gistdex_spark.streaming.ingest import (
-        stream_neardup_filter_minhash_stored,
-    )
-
-    static_docs = spark.createDataFrame(
-        [
-            (100, "the quick brown fox jumps over the lazy dog " * 10),
-            (101, "pack my box with five dozen liquor jugs today " * 10),
-        ],
-        "doc_id BIGINT, text STRING",
-    )
-    store = str(tmp_path / "mh_store")
-    write_minhash_store(static_docs, store)
-
-    incoming = [
-        (1, "the quick brown fox jumps over the lazy dog " * 10 + "x"),
-        (2, "completely different content about spark streaming " * 10),
-        (3, "pack my box with five dozen liquor jugs today " * 10 + "y"),
-    ]
-    src = str(tmp_path / "mh_src")
-    os.makedirs(src, exist_ok=True)
-    with open(f"{src}/b0.json", "w") as f:
-        for i, t in incoming:
-            f.write(_json.dumps({"doc_id": i, "text": t}) + "\n")
-    stream = spark.readStream.schema("doc_id BIGINT, text STRING").json(src)
-    out = str(tmp_path / "mh_out")
-    q = stream_neardup_filter_minhash_stored(
-        stream, store, out, threshold=TH,
-        checkpoint_dir=str(tmp_path / "mh_ckpt"),
-    )
-    drain(q, 120)
-    got = {r.doc_id for r in spark.read.parquet(out).collect()}
-
-    batch = spark.createDataFrame(incoming, "doc_id BIGINT, text STRING")
-    rejected = {
-        r.doc_id_a
-        for r in incremental_pairs_stored(
-            spark, store, batch, threshold=TH
-        ).collect()
-        if r.doc_id_a in {1, 2, 3}
-    } | {
-        r.doc_id_b
-        for r in incremental_pairs_stored(
-            spark, store, batch, threshold=TH
-        ).collect()
-        if r.doc_id_b in {1, 2, 3}
-    }
-    assert got == {i for i, _ in incoming} - rejected
-    assert 2 in got  # the novel doc was admitted
-
-
-def test_stream_minhash_filter_releases_its_checkpoints(spark, tmp_path):
-    """Every micro-batch's probe checkpoints are released with the
-    batch: after a multi-batch run no RDD the stream created is still
-    persisted."""
-    import json as _json
-    import os
-
-    from gistdex_spark.streaming.ingest import (
-        stream_neardup_filter_minhash_stored,
-    )
-
-    store = str(tmp_path / "mh_store")
-    write_minhash_store(
-        spark.createDataFrame(
-            [(100, "the quick brown fox jumps over the lazy dog " * 10)],
-            "doc_id BIGINT, text STRING",
-        ),
-        store,
-    )
-    src = str(tmp_path / "mh_src")
-    os.makedirs(src)
-    for b, rows in enumerate([
-        [(1, "the quick brown fox jumps over the lazy dog " * 10 + "x")],
-        [(2, "completely different content about spark streaming " * 10)],
-    ]):
-        with open(f"{src}/b{b}.json", "w") as f:
-            for i, t in rows:
-                f.write(_json.dumps({"doc_id": i, "text": t}) + "\n")
-    stream = (
-        spark.readStream.schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-    )
-    before = persistent_rdd_ids(spark)
-    q = stream_neardup_filter_minhash_stored(
-        stream, store, str(tmp_path / "mh_out"), threshold=TH,
-        checkpoint_dir=str(tmp_path / "mh_ckpt"),
-    )
-    drain(q, 120)
-    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 2
-    assert persistent_rdd_ids(spark) <= before
 
 
 def test_append_then_probe_still_exact(spark, split, tmp_path_factory):

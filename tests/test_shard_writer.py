@@ -20,7 +20,7 @@ from gistdex_spark.sources.shard_writer import (
     write_packed_shards,
 )
 from gistdex_spark.sources.tables import load_table
-from tests.conftest import SF_CORRECTNESS, drain, persistent_rdd_ids
+from tests.conftest import SF_CORRECTNESS, persistent_rdd_ids
 
 SHARD_TOKENS = 2048
 
@@ -128,7 +128,8 @@ def test_token_unit_seam_carries_through(spark, tmp_path):
 def test_append_converges_to_single_write(spark, tmp_path):
     """write(b1); append(b2); append(b3) must census-equal
     write(b1∪b2∪b3) — the daily-ingest contract: spans continue at the
-    stored stream end, existing rows never rewritten."""
+    stored stream end, existing rows never rewritten. Each unseamed
+    append releases its own checkpoints."""
     docs = load_table(spark, SF_CORRECTNESS, "documents").select(
         "doc_id", "text"
     )
@@ -140,8 +141,10 @@ def test_append_converges_to_single_write(spark, tmp_path):
     b2 = docs.filter((F.col("doc_id") >= 150) & (F.col("doc_id") < 320))
     b3 = docs.filter(F.col("doc_id") >= 320)
     write_packed_shards(b1, out_inc, shard_tokens=SHARD_TOKENS)
+    before = persistent_rdd_ids(spark)
     append_packed_shards(spark, b2, out_inc, shard_tokens=SHARD_TOKENS)
     append_packed_shards(spark, b3, out_inc, shard_tokens=SHARD_TOKENS)
+    assert persistent_rdd_ids(spark) <= before
     write_packed_shards(docs, out_all, shard_tokens=SHARD_TOKENS)
     got = _frame(read_shard_census(spark, out_inc))
     want = _frame(read_shard_census(spark, out_all))
@@ -239,68 +242,6 @@ def test_append_guard_runs_before_write(spark, tmp_path, seam):
     assert _frame(read_shard_census(spark, out)) == before
 
 
-def test_stream_shard_append_matches_single_write(spark, tmp_path):
-    """Streaming mirror: micro-batched docs appended through
-    stream_shard_append must leave shards census-equal to one
-    write_packed_shards over everything — and a REPLAYED (already
-    stored) micro-batch must be a no-op via the monotone-id guard."""
-    import json as _json
-
-    from gistdex_spark.streaming.ingest import stream_shard_append
-
-    docs = load_table(spark, SF_CORRECTNESS, "documents").select(
-        "doc_id", "text"
-    )
-    rows = sorted(docs.collect(), key=lambda r: r.doc_id)[:200]
-    src = str(tmp_path / "src")
-    os.makedirs(src, exist_ok=True)
-    thirds = [rows[:70], rows[70:140], rows[140:]]
-    for i, chunk in enumerate(thirds):
-        with open(f"{src}/b{i}.json", "w") as f:
-            for r in chunk:
-                f.write(
-                    _json.dumps({"doc_id": r.doc_id, "text": r.text}) + "\n"
-                )
-        # The file source orders batches by modification time; the
-        # writer's contract is monotone INGEST order, so the test must
-        # deliver monotone batches (distinct mtimes — same-second
-        # writes can reorder).
-        os.utime(f"{src}/b{i}.json", (1_700_000_000 + i, 1_700_000_000 + i))
-    stream = (
-        spark.readStream.schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-    )
-    out = str(tmp_path / "out")
-    before = persistent_rdd_ids(spark)
-    q = stream_shard_append(
-        stream, out, shard_tokens=SHARD_TOKENS,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    drain(q, 180)
-    # each micro-batch releases its checkpoints when it is done
-    assert persistent_rdd_ids(spark) <= before
-
-    batch_df = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
-    out_all = str(tmp_path / "all")
-    write_packed_shards(batch_df, out_all, shard_tokens=SHARD_TOKENS)
-    got = _frame(read_shard_census(spark, out))
-    assert got == _frame(read_shard_census(spark, out_all))
-    # replay of an already-applied slice: no-op (no raise, no rows)
-    from gistdex_spark.sources.shard_writer import append_packed_shards  # noqa: F401
-    from gistdex_spark.streaming.ingest import stream_shard_append as _s  # noqa: F401
-
-    n_before = spark.read.parquet(out).count()
-    stream2 = spark.readStream.schema("doc_id BIGINT, text STRING").json(src)
-    q2 = stream_shard_append(
-        stream2, out, shard_tokens=SHARD_TOKENS,
-        checkpoint_dir=str(tmp_path / "ckpt2"),  # fresh ckpt = redelivery
-    )
-    drain(q2, 180)
-    assert spark.read.parquet(out).count() == n_before
-    assert _frame(read_shard_census(spark, out)) == got
-
-
 def test_curriculum_writer_ranks_narrow_rows(spark, monkeypatch):
     """curriculum_shard_write_census must stamp its curriculum order on
     NARROW (doc_id, quality) rows — the global_row_index docstring's own
@@ -331,42 +272,11 @@ def test_curriculum_writer_ranks_narrow_rows(spark, monkeypatch):
         )
 
 
-def test_committer_version_option_reaches_the_committer(spark, tmp_path):
-    """The per-write committer override (r14 ADVICE high: the streaming
-    shard-append path must not inherit session-wide v2) works by
-    injecting a DataFrameWriter option into the write job's Hadoop conf
-    — pin that plumbing EMPIRICALLY: an invalid algorithm version must
-    raise from inside FileOutputCommitter (if the option silently never
-    reached it, the write would succeed under the session default and
-    the crash-safety story would be fiction), and v1 must produce a
-    census identical to the default-committer write."""
-    docs = load_table(spark, SF_CORRECTNESS, "documents").select(
-        "doc_id", "text"
-    )
-    from py4j.protocol import Py4JJavaError
-
-    out_bad = str(tmp_path / "bad")
-    with pytest.raises(Py4JJavaError, match="algorithm version"):
-        write_packed_shards(
-            docs, out_bad, shard_tokens=SHARD_TOKENS, committer_version="3"
-        )
-    out_v1 = str(tmp_path / "v1")
-    out_def = str(tmp_path / "default")
-    write_packed_shards(
-        docs, out_v1, shard_tokens=SHARD_TOKENS, committer_version="1"
-    )
-    write_packed_shards(docs, out_def, shard_tokens=SHARD_TOKENS)
-    assert _frame(read_shard_census(spark, out_v1)) == _frame(
-        read_shard_census(spark, out_def)
-    )
-
-
 def test_torn_store_append_raises_not_drops(spark, tmp_path):
     """Torn-store detection (r14 ADVICE high): if a crashed append
     published only part of a batch (committer-v2 semantics), the stored
-    spans no longer tile [0, total). A later append — including the
-    streaming redelivery path — must RAISE, not trust max(doc_to) and
-    silently drop the replayed batch's unwritten lower-doc rows."""
+    spans no longer tile [0, total). A later append must RAISE, not
+    trust max(doc_to) and freeze the hole into the stream."""
     import shutil
 
     docs = load_table(spark, SF_CORRECTNESS, "documents").select(
